@@ -1,34 +1,92 @@
-"""Connected components over pair graphs (SURVEY.md §2.10 extension).
+"""Graph operators over pair and edge relations (SURVEY.md §2.10
+extension).
 
-Near-duplicate detection emits PAIRS (MinHash/SimHash/winnowing/
-embedding LSH all return ``(id_a, id_b)``); deduplication needs
-CLUSTERS — the transitive closure of those pairs — so that one
-survivor is kept per component, not per pair. This module provides
-the iterative min-label propagation that turns pairs into components.
+- Connectivity: :func:`connected_components` turns near-duplicate
+  PAIRS (MinHash/SimHash/winnowing/embedding LSH all emit
+  ``(id_a, id_b)``) into CLUSTERS, so that one survivor is kept per
+  component, not per pair; :func:`dedup_clusters` summarizes them and
+  :func:`incremental_components` folds new pairs into prior labels.
+- Ranking: :func:`pagerank_scaled`, and the mass-conserving
+  :func:`pagerank_conserving` / :func:`pagerank_personalized`, all in
+  exact bigint arithmetic so a SQL oracle replays them bit for bit.
+- Paths and structure: :func:`shortest_paths` (BFS),
+  :func:`kcore` (peeling), :func:`label_propagation` (communities),
+  and the single-pass wedge joins :func:`triangle_stats` and
+  :func:`neighborhood_overlap`.
 
-Algorithm: every node starts labeled with its own id; each round every
-node takes the min label in its closed neighborhood; stop when no
-label changes. Rounds = graph diameter (near-dup graphs are
-overwhelmingly tiny cliques/chains, so 2-4 rounds in practice — the
-classic HashToMin / Pregel-style propagation). Each round is one
-shuffle on the node id; the edge relation is persisted once and
-reused by every round.
+Round state. Every iterative loop here hands the relations it
+materializes to one owner, :class:`_RoundState`, under one rule:
 
-At 100 TB: near-dup graphs have billions of nodes but tiny components;
-min-propagation with early termination is the standard scalable
-answer (GraphFrames' connectedComponents uses the same family of
-algorithms). For pathological long-chain / high-diameter graphs the
-large-star/small-star rewrite (Kiveris et al., SoCC'14) is available
-via ``connected_components(..., algorithm="star")`` — O(log n)
-alternations regardless of diameter.
+- a round's relation is ``localCheckpoint``-ed eagerly. Without the
+  cut, the logical plan re-embeds the (possibly expensive) upstream
+  plan once per round and planning itself OOMs after a handful of
+  rounds — the textbook failure of iterative DataFrame algorithms;
+- the relation it supersedes is released as soon as nothing reads it,
+  so executor storage stays bounded by one round;
+- the relations the returned result reads are handed to the caller,
+  who frees them with
+  :func:`parcialbigdata_spark.session.release_checkpoint`; on every
+  other exit (non-convergence, an exception, an empty graph) all that
+  is still held is released, so a caller that catches and retries
+  does not accumulate orphaned checkpoint RDDs.
+
+On a cluster with executor loss, reliable ``checkpoint()`` against the
+checkpoint dir would replace ``localCheckpoint`` in that one place; the
+loops are unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from parcialbigdata_spark.session import release_checkpoint
+
+
+class _RoundState:
+    """The one owner of an iterative loop's materialized relations (the
+    round-state rule in the module docstring). Use as a context
+    manager: everything still held at exit is released, except what
+    :meth:`keep` handed to the caller."""
+
+    def __init__(self) -> None:
+        self._held: list[tuple[DataFrame, Callable[[], None]]] = []
+
+    def __enter__(self) -> _RoundState:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release(*(df for df, _ in self._held))
+
+    def checkpoint(self, df: DataFrame, *supersedes: DataFrame | None) -> DataFrame:
+        """Materialize ``df`` now, then release what it supersedes."""
+        out = df.localCheckpoint(eager=True)
+        self._held.append((out, lambda: release_checkpoint(out)))
+        self.release(*supersedes)
+        return out
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Cache a helper relation that every round reads."""
+        out = df.persist()
+        self._held.append((out, out.unpersist))
+        return out
+
+    def release(self, *dfs: DataFrame | None) -> None:
+        """Release held relations; anything not held (``None``, a lazy
+        plan, an already released relation) is ignored."""
+        for df in dfs:
+            for i, (held, free) in enumerate(self._held):
+                if held is df:
+                    del self._held[i]
+                    free()
+                    break
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` to the caller: it outlives the loop."""
+        self._held = [(h, f) for h, f in self._held if h is not df]
+        return df
 
 
 def connected_components(
@@ -46,9 +104,13 @@ def connected_components(
     ``RuntimeError`` if the labels have not converged after
     ``max_iter`` rounds (diameter > max_iter — not a near-dup graph).
 
-    ``algorithm="label"`` (default) is the min-label propagation below:
-    rounds = graph diameter, the right trade for near-dup graphs (tiny
-    cliques/chains). ``algorithm="star"`` switches to the alternating
+    ``algorithm="label"`` (default) is min-label propagation: every
+    node starts labeled with its own id and each hop takes the min
+    label in its closed neighborhood, so rounds track the graph
+    diameter — the right trade for near-dup graphs, which are
+    overwhelmingly tiny cliques/chains (the classic HashToMin /
+    Pregel-style propagation; GraphFrames' connectedComponents uses the
+    same family). ``algorithm="star"`` switches to the alternating
     large-star/small-star edge rewrite (Kiveris et al., *Connected
     Components in MapReduce and Beyond*, SoCC'14), which converges in
     O(log n) rounds regardless of diameter — the fallback for
@@ -57,27 +119,19 @@ def connected_components(
     converges well under ``max_iter`` while propagation provably
     cannot).
 
-    Lineage discipline: every round's label relation is
-    ``localCheckpoint``-ed. Without this the logical plan re-embeds the
-    (possibly expensive) upstream pair plan once per round and grows
-    exponentially — planning itself OOMs after a handful of rounds, the
-    textbook failure of iterative DataFrame algorithms. On a cluster
-    with executor loss, swap for reliable ``checkpoint()`` against the
-    checkpoint dir; the loop is unchanged.
-
-    ``assume_distinct=True`` (r14, label path only) skips the edge
-    dedup shuffle. Min-label propagation is invariant to duplicate
-    edges (min over a multiset equals min over its set), so the
-    result is identical either way — the flag only removes an
-    Exchange when the caller's pairs are already pair-grained (every
-    near-dup pair producer here emits groupBy/distinct output). Keep
-    the default for arbitrary input: heavy edge multiplicity would
-    multiply the per-round join fan-out."""
+    ``assume_distinct=True`` (label path only) skips the edge dedup
+    shuffle. Min-label propagation is invariant to duplicate edges (min
+    over a multiset equals min over its set), so the result is
+    identical either way — the flag only removes an Exchange when the
+    caller's pairs are already pair-grained (every near-dup pair
+    producer here emits groupBy/distinct output). Keep the default for
+    arbitrary input: heavy edge multiplicity would multiply the
+    per-round join fan-out."""
     if algorithm == "star":
         return _connected_components_star(pairs, src, dst, max_iter)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
-    # Symmetrize once; checkpoint cuts the upstream pair plan out of
+    # Symmetrize once; the checkpoint cuts the upstream pair plan out of
     # every round's lineage. The checkpointed relation is hash-
     # partitioned on the probe-side key ``v`` FIRST (LogicalRDD
     # retains the physical partitioning), so at scale each round's
@@ -87,97 +141,70 @@ def connected_components(
     sym = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
     if not assume_distinct:
         sym = sym.distinct()
-    edges = sym.repartition(F.col("v")).localCheckpoint(eager=True)
-    # Round 1's first hop is SPECIALIZED (r10): with identity labels
-    # the closed-neighborhood min is just least(u, min(v)) grouped by
-    # u — one hash agg over the checkpointed edges, replacing the r9
-    # chain of distinct-nodes (shuffle) + edges⋈labels join + agg +
-    # left join. Symmetrization guarantees every node appears as u,
-    # so the agg's key set IS the node set and no separate label
-    # base is needed.
-    labels = edges.groupBy("u").agg(
-        F.least(F.col("u"), F.min("v")).alias("comp")
-    ).select(F.col("u").alias("node"), "comp")
+    with _RoundState() as rs:
+        edges = rs.checkpoint(sym.repartition(F.col("v")))
+        # Round 0's first hop is specialized: with identity labels the
+        # closed-neighborhood min is just least(u, min(v)) grouped by u
+        # — one hash agg over the checkpointed edges instead of a
+        # distinct-nodes shuffle plus a join, an agg and a left join.
+        # Symmetrization guarantees every node appears as u, so the
+        # agg's key set IS the node set.
+        labels = edges.groupBy("u").agg(
+            F.least(F.col("u"), F.min("v")).alias("comp")
+        ).select(F.col("u").alias("node"), "comp")
 
-    def _hop(lab: DataFrame) -> DataFrame:
-        # Min label over the closed neighborhood: own label ∪ neighbors'.
-        neighbor_min = (
-            edges.join(lab, edges.v == lab.node)
-            .groupBy("u")
-            .agg(F.min("comp").alias("n_comp"))
-        )
-        return lab.join(neighbor_min, lab.node == neighbor_min.u, "left").select(
-            "node",
-            F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias("comp"),
-        )
-
-    def _hop_tracked(lab: DataFrame) -> DataFrame:
-        # Second hop of a round, threading the first hop's label
-        # through as ``__prev`` so the round can observe both.
-        neighbor_min = (
-            edges.join(lab, edges.v == lab.node)
-            .groupBy("u")
-            .agg(F.min("comp").alias("n_comp"))
-        )
-        return lab.join(neighbor_min, lab.node == neighbor_min.u, "left").select(
-            "node",
-            F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias("comp"),
-            F.col("comp").alias("__prev"),
-        )
-
-    labels_checkpointed = False
-    for i in range(max_iter):
-        # TWO hops per checkpoint round: label distance covered per
-        # round doubles while the per-round FIXED cost (ONE
-        # eager-checkpoint job) stays constant — at fixture scale that
-        # fixed cost dominates the loop, at cluster scale the second
-        # hop's joins are the same data-proportional work either way.
-        # NOT more than two: each un-checkpointed hop references its
-        # input relation twice (label base + neighbor join side), so
-        # plan size doubles per hop — 4-hop rounds were measured
-        # SLOWER (2^4 subplan copies) despite fewer checkpoints.
-        #
-        # Convergence detection is WITHIN the round, not across
-        # rounds: the second hop threads the first hop's labels
-        # through as ``__prev``, and both exact DECIMAL(38) label sums
-        # ride the checkpoint materialization itself via observe()
-        # (CollectMetrics fires during the eager-checkpoint action).
-        # Labels are MONOTONE non-increasing per node per hop, so
-        # Σcomp == Σ__prev ⟺ hop 2 changed NO label ⟺ hop 1's output
-        # was already the fixpoint — the round detects its own
-        # convergence, with no separate probe job and no extra
-        # confirmation round (r8 ran a per-round aggregation job and
-        # always paid one full no-op round to observe sum stability;
-        # for the clique-dominated near-dup graphs this loop serves,
-        # that halves the rounds: hop 1 converges, hop 2 certifies).
-        obs = Observation(f"cc_round_{i}")
-        # Round 0's hop 1 already happened in the specialized initial
-        # agg above — its round runs hop 2 only (still self-certifying:
-        # Σcomp == Σ__prev ⟺ the specialized hop was the fixpoint).
-        new_labels = (
-            _hop_tracked(labels if i == 0 else _hop(labels))
-            .observe(
-                obs,
-                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s_comp"),
-                F.sum(F.col("__prev").cast("decimal(38,0)")).alias("s_prev"),
+        def _hop(lab: DataFrame) -> DataFrame:
+            # Min label over the closed neighborhood: own label ∪
+            # neighbors'. The input label rides along as ``__prev`` so
+            # a round can observe both (the optimizer prunes it when
+            # another hop consumes this one).
+            neighbor_min = (
+                edges.join(lab, edges.v == lab.node)
+                .groupBy("u")
+                .agg(F.min("comp").alias("n_comp"))
             )
-            .select("node", "comp")
-            .localCheckpoint(eager=True)
-        )
-        got = obs.get
-        if labels_checkpointed:
-            release_checkpoint(labels)
-        labels, labels_checkpointed = new_labels, True
-        if got["s_comp"] == got["s_prev"]:
-            release_checkpoint(edges)
-            return labels.select(F.col("node"), F.col("comp").alias("component"))
-    # Release the round state BEFORE raising: a caller that catches and
-    # retries with a larger max_iter must not accumulate orphaned
-    # checkpoint RDDs (unpersist cannot free these — that is the whole
-    # point of release_checkpoint).
-    release_checkpoint(edges)
-    if labels_checkpointed:
-        release_checkpoint(labels)
+            return lab.join(neighbor_min, lab.node == neighbor_min.u, "left").select(
+                "node",
+                F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias("comp"),
+                F.col("comp").alias("__prev"),
+            )
+
+        for i in range(max_iter):
+            # TWO hops per checkpoint round: label distance covered per
+            # round doubles while the per-round FIXED cost (ONE
+            # eager-checkpoint job) stays constant — at fixture scale
+            # that fixed cost dominates the loop, at cluster scale the
+            # second hop's joins are the same data-proportional work
+            # either way. NOT more than two: each un-checkpointed hop
+            # references its input relation twice (label base +
+            # neighbor join side), so plan size doubles per hop — 4-hop
+            # rounds were measured SLOWER (2^4 subplan copies) despite
+            # fewer checkpoints.
+            #
+            # Convergence detection is WITHIN the round: both exact
+            # DECIMAL(38) label sums of the second hop ride the
+            # checkpoint materialization itself via observe()
+            # (CollectMetrics fires during the eager-checkpoint
+            # action). Labels are MONOTONE non-increasing per node per
+            # hop, so Σcomp == Σ__prev ⟺ hop 2 changed NO label ⟺ hop
+            # 1's output was already the fixpoint — no separate probe
+            # job and no confirmation round; for clique-dominated
+            # near-dup graphs hop 1 converges and hop 2 certifies.
+            # Round 0 runs hop 2 only: its hop 1 is the specialized agg.
+            obs = Observation(f"cc_round_{i}")
+            labels = rs.checkpoint(
+                _hop(labels if i == 0 else _hop(labels))
+                .observe(
+                    obs,
+                    F.sum(F.col("comp").cast("decimal(38,0)")).alias("s_comp"),
+                    F.sum(F.col("__prev").cast("decimal(38,0)")).alias("s_prev"),
+                )
+                .select("node", "comp"),
+                labels,
+            )
+            got = obs.get
+            if got["s_comp"] == got["s_prev"]:
+                return rs.keep(labels).select(F.col("node"), F.col("comp").alias("component"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -218,45 +245,41 @@ def _connected_components_star(
     """Alternating large-star/small-star until the edge set is stable
     (then every edge points node → component-min, i.e. the graph is a
     union of stars rooted at the minima). O(log n) alternations on any
-    graph — the long-chain-safe fallback. Same lineage discipline as
-    the propagation loop: localCheckpoint per round.
+    graph — the long-chain-safe fallback.
 
     Convergence check is EXACT (two anti-join probes, each
     short-circuited by limit(1)) — a hash-compare could, with
     vanishing but nonzero probability, declare a wrong fixed point."""
-    nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .union(pairs.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    E = (
-        pairs.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
+    with _RoundState() as rs:
+        nodes = rs.checkpoint(
+            pairs.select(F.col(src).alias("node"))
+            .union(pairs.select(F.col(dst).alias("node")))
+            .distinct()
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        new_E = _small_star(_large_star(E)).localCheckpoint(eager=True)
-        grew = new_E.join(E, ["u", "v"], "left_anti").limit(1).count()
-        shrank = E.join(new_E, ["u", "v"], "left_anti").limit(1).count()
-        stable = grew == 0 and shrank == 0
-        # Both stability probes have run: the previous edge generation
-        # is dead — release it (the final E and `nodes` are ancestors
-        # of the returned lazy plan and must stay).
-        release_checkpoint(E)
-        E = new_E
-        if stable:
-            labels = E.groupBy("u").agg(F.min("v").alias("component")).select(
-                F.col("u").alias("node"), "component"
+        E = rs.checkpoint(
+            pairs.select(
+                F.greatest(F.col(src), F.col(dst)).alias("u"),
+                F.least(F.col(src), F.col(dst)).alias("v"),
             )
-            return (
-                nodes.join(labels, "node", "left")
-                .select("node", F.coalesce(F.col("component"), F.col("node")).alias("component"))
-            )
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        for _ in range(max_iter):
+            new_E = rs.checkpoint(_small_star(_large_star(E)))
+            grew = new_E.join(E, ["u", "v"], "left_anti").limit(1).count()
+            shrank = E.join(new_E, ["u", "v"], "left_anti").limit(1).count()
+            # Both stability probes have run: the previous edge
+            # generation is dead.
+            rs.release(E)
+            E = new_E
+            if grew == 0 and shrank == 0:
+                labels = rs.keep(E).groupBy("u").agg(F.min("v").alias("component")).select(
+                    F.col("u").alias("node"), "component"
+                )
+                return (
+                    rs.keep(nodes).join(labels, "node", "left")
+                    .select("node", F.coalesce(F.col("component"), F.col("node")).alias("component"))
+                )
     raise RuntimeError(
         f"connected_components(star) did not converge in {max_iter} rounds"
     )
@@ -331,6 +354,59 @@ def incremental_components(
     return cc.unionByName(missing)
 
 
+def _pagerank_graph(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    assume_distinct: bool,
+    hold: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> tuple[DataFrame, DataFrame]:
+    """The graph every PageRank iterates over: ``(src, dst)`` edges and
+    ``base_nodes`` = (node, out_degree) for every node, out_degree 0
+    for nodes without out-edges (they contribute nothing). Duplicate
+    edges would double-count contributions, so they are dropped unless
+    the caller certifies distinctness (one full-edge shuffle saved).
+    ``hold`` wraps both relations as they are built."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if not assume_distinct:
+        e = e.distinct()
+    e = hold(e)
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    base_nodes = hold(
+        nodes.join(deg.withColumnRenamed("src", "node"), "node", "left")
+        .fillna({"out_degree": 0})
+    )
+    return e, base_nodes
+
+
+def _with_inflow(e: DataFrame, ranks: DataFrame) -> DataFrame:
+    """``ranks`` plus each node's ``inflow``: the sum of
+    ``rank DIV out_degree`` over its in-edges, 0 if none. One join
+    edges⋈ranks on ``src`` (both sides hashed on the same key —
+    co-partitioned under AQE) + one groupBy(dst) agg: the canonical
+    2-shuffle PageRank round."""
+    contrib = (
+        e.join(
+            ranks.filter(F.col("out_degree") > 0).select(
+                F.col("node").alias("src"), "out_degree", "rank_scaled"
+            ),
+            "src",
+        )
+        .select(
+            F.col("dst").alias("node"),
+            F.expr("rank_scaled DIV out_degree").alias("c"),
+        )
+        .groupBy("node")
+        .agg(F.sum("c").alias("inflow"))
+    )
+    return ranks.join(contrib, "node", "left").fillna({"inflow": 0})
+
+
 def pagerank_scaled(
     edges: DataFrame,
     src: str = "src",
@@ -358,48 +434,26 @@ def pagerank_scaled(
     Plan shape (the 100 TB story): the edge relation and the static
     (node, out_degree) relation are shared across rounds via
     ReusedExchange (the whole run is one query when iterations ≤
-    checkpoint_interval — no cache needed, no cached-relation leak);
-    each iteration is one join edges⋈ranks on ``src`` (both sides
-    hashed on the same key — co-partitioned under AQE) + one
-    groupBy(dst) agg — the canonical 2-shuffle PR round. Lineage is cut with
-    ``localCheckpoint`` every ``checkpoint_interval`` rounds — the
-    :func:`connected_components` discipline, but metered: eager
-    checkpointing materializes the rank relation and measures ~4×
-    slower for short runs, while a handful of uncheckpointed rounds
-    keeps the plan shallow enough to compile. Every interval-th round
-    pays one materialization; swap for ``checkpoint()`` on a cluster.
-    Total cost is O(iterations · |edges|) with no driver-side data
-    movement."""
+    checkpoint_interval — no cache needed, no cached-relation leak).
+    Unlike the other loops, rounds are checkpointed only every
+    ``checkpoint_interval`` rounds: eager checkpointing materializes
+    the rank relation and measures ~4× slower for short runs, while a
+    handful of uncheckpointed rounds keeps the plan shallow enough to
+    compile. Total cost is O(iterations · |edges|) with no driver-side
+    data movement."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if checkpoint_interval < 1:
         raise ValueError("checkpoint_interval must be >= 1")
-    # Duplicate edges would double-count contributions, so dedup unless
-    # the caller certifies distinctness (skips one full-edge shuffle —
-    # at web scale the edge list is usually already a distinct relation).
-    # No persist() here (r4, ADVICE r3 cache-leak fix): with
-    # iterations ≤ checkpoint_interval the whole computation is ONE
-    # query at the caller's action, and Catalyst's ReusedExchange
-    # dedups the repeated edge-relation subplan across the per-round
-    # joins within that execution — a cache would add a leak (or a
-    # lineage-cutting materialization that blinds plan inspection) for
-    # no saved work. Longer runs recompute the edge distinct once per
-    # checkpoint action; that is one cheap shuffle per interval.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # (node, out_degree) is static across rounds; nodes with no
-    # out-edges carry degree 0 and contribute nothing.
-    base_nodes = (
-        nodes.join(deg.withColumnRenamed("src", "node"), "node", "left")
-        .fillna({"out_degree": 0})
-    )
+    # No cache here: with iterations ≤ checkpoint_interval the whole
+    # computation is ONE query at the caller's action, and Catalyst's
+    # ReusedExchange dedups the repeated edge-relation subplan across
+    # the per-round joins within that execution — a cache would add a
+    # leak (or a lineage-cutting materialization that blinds plan
+    # inspection) for no saved work. Longer runs recompute the edge
+    # distinct once per checkpoint action; that is one cheap shuffle
+    # per interval.
+    e, base_nodes = _pagerank_graph(edges, src, dst, assume_distinct)
     n_total = base_nodes.agg(F.count(F.lit(1)).alias("n")).select(
         F.col("n"),
         F.expr(f"(({100 - damping_pct}L * {scale}L) DIV 100) DIV n").alias("base"),
@@ -408,54 +462,145 @@ def pagerank_scaled(
     ranks = base_nodes.crossJoin(F.broadcast(n_total)).select(
         "node", "out_degree", "base", F.col("init").alias("rank_scaled")
     )
-    ckpt = None
-    for it in range(iterations):
-        contrib = (
-            e.join(
-                ranks.filter(F.col("out_degree") > 0).select(
-                    F.col("node").alias("src"), "out_degree", "rank_scaled"
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_scaled DIV out_degree").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            ranks.join(contrib, "node", "left")
-            .fillna({"inflow": 0})
-            .select(
+    with _RoundState() as rs:
+        ckpt = None
+        for it in range(iterations):
+            ranks = _with_inflow(e, ranks).select(
                 "node",
                 "out_degree",
                 "base",
-                F.expr(f"base + ({damping_pct}L * inflow) DIV 100").alias(
-                    "rank_scaled"
-                ),
+                F.expr(f"base + ({damping_pct}L * inflow) DIV 100").alias("rank_scaled"),
+            )
+            if (it + 1) % checkpoint_interval == 0 and it + 1 < iterations:
+                ranks = ckpt = rs.checkpoint(ranks, ckpt)
+        out = ranks.select("node", "out_degree", "rank_scaled")
+        if ckpt is not None:
+            # A retained intermediate checkpoint would be an unreleasable
+            # ancestor of the returned plan; materialize the result
+            # itself instead, so the caller frees everything with one
+            # release_checkpoint() on the returned relation.
+            out = rs.checkpoint(out, ckpt)
+        return rs.keep(out)
+
+
+def _dangling_sum(rank: str) -> Column:
+    """Summed ``rank`` of the out-degree-0 nodes (0 if none)."""
+    return F.coalesce(
+        F.sum(F.when(F.col("out_degree") == 0, F.col(rank))),
+        F.lit(0).cast("bigint"),
+    ).alias("dangling")
+
+
+def _pagerank_exact(
+    edges: DataFrame,
+    seed: int | None,
+    src: str,
+    dst: str,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+    assume_distinct: bool,
+) -> DataFrame:
+    """The conserving power iteration behind :func:`pagerank_conserving`
+    (``seed=None``: uniform start and teleport, residue to the minimum
+    node) and :func:`pagerank_personalized` (start, teleport, damped
+    dangling mass and residue all at ``seed``).
+
+    One job per round: the dangling sum and the round's raw total ride
+    the eager-checkpoint materialization as CollectMetrics and come
+    back to the driver as ints, injected into the next round as
+    literals. The same bigint sums feed the same DIV chain, so a
+    chained-CTE oracle reproduces every rank bit for bit."""
+    if iterations < 1:
+        raise ValueError("iterations must be >= 1")
+    with _RoundState() as rs:
+        e, base_nodes = _pagerank_graph(edges, src, dst, assume_distinct, rs.persist)
+        if seed is None:
+            # Graph-global params come to the driver ONCE (one
+            # bounded-row first() over the cached node relation); Python
+            # // equals SQL DIV on these non-negative ints.
+            prow = base_nodes.agg(
+                F.count(F.lit(1)).alias("n"), F.min("node").alias("min_node")
+            ).first()
+            n_nodes = int(prow["n"])
+            if n_nodes == 0:  # empty graph: empty result, same schema
+                empty = base_nodes.select(
+                    "node", "out_degree", F.lit(0).cast("bigint").alias("rank_scaled")
+                )
+                return rs.keep(rs.checkpoint(empty))
+            target = int(prow["min_node"])
+            init_val = scale // n_nodes
+            target_init = scale - init_val * (n_nodes - 1)
+            base_val = (((100 - damping_pct) * scale) // 100) // n_nodes
+
+            def rank_raw(dangling: int) -> str:
+                return (
+                    f"{base_val}L + ({damping_pct}L *"
+                    f" (inflow + {dangling}L DIV {n_nodes}L)) DIV 100"
+                )
+        else:
+            target, init_val, target_init = seed, 0, scale
+            teleport = ((100 - damping_pct) * scale) // 100
+
+            def rank_raw(dangling: int) -> str:
+                return (
+                    f"({damping_pct}L * inflow) DIV 100"
+                    f" + CASE WHEN node = {seed}L THEN {teleport}L"
+                    f" + ({damping_pct}L * {dangling}L) DIV 100 ELSE 0L END"
+                )
+        is_target = F.col("node") == F.lit(target)
+        # The start vector already conserves: the DIV shortfall of
+        # scale/n goes to the target, the same rule as every round's
+        # residue.
+        obs = Observation("pr_exact_init")
+        held = rs.checkpoint(
+            base_nodes.select(
+                "node",
+                "out_degree",
+                F.when(is_target, F.lit(target_init))
+                .otherwise(F.lit(init_val))
+                .cast("bigint")
+                .alias("rank_scaled"),
+            ).observe(
+                obs,
+                _dangling_sum("rank_scaled"),
+                # Whether the target itself dangles decides whether its
+                # residue joins the NEXT round's dangling sum.
+                F.max(F.when(is_target, F.col("out_degree"))).alias("target_od"),
             )
         )
-        if (it + 1) % checkpoint_interval == 0 and it + 1 < iterations:
-            prev_ckpt = ckpt
-            ranks = ckpt = ranks.localCheckpoint(eager=True)
-            # The new checkpoint is self-contained once materialized, so
-            # the one it supersedes can release its cached partitions —
-            # repeated calls must not grow the persisted-RDD set
-            # (ADVICE r3 cache-leak discipline; the LAST checkpoint is
-            # an ancestor of the returned plan and must stay).
-            if prev_ckpt is not None:
-                release_checkpoint(prev_ckpt)
-    out = ranks.select("node", "out_degree", "rank_scaled")
-    if ckpt is not None:
-        # A retained intermediate checkpoint would be an unreleasable
-        # ancestor of the returned plan; materialize the result itself
-        # instead and release the intermediate, so the caller can free
-        # everything with one release_checkpoint() on the returned
-        # relation.
-        out = out.localCheckpoint(eager=True)
-        release_checkpoint(ckpt)
-    return out
+        got = obs.get
+        if got["target_od"] is None:
+            raise ValueError(f"seed {seed} is not a node of the graph")
+        target_dangling = int(got["target_od"]) == 0
+        dangling_val = int(got["dangling"])
+        ranks = held
+        for it in range(iterations):
+            obs = Observation(f"pr_exact_round_{it}")
+            held = rs.checkpoint(
+                _with_inflow(e, ranks)
+                .select("node", "out_degree", F.expr(rank_raw(dangling_val)).alias("rank_raw"))
+                .observe(
+                    obs,
+                    F.coalesce(F.sum("rank_raw"), F.lit(0).cast("bigint")).alias("s_raw"),
+                    _dangling_sum("rank_raw"),
+                ),
+                held,
+            )
+            got = obs.get
+            # Integral DIV truncation loses a few units per round; the
+            # exact shortfall goes to the target.
+            residue_val = scale - int(got["s_raw"])
+            ranks = held.select(
+                "node",
+                "out_degree",
+                (
+                    F.col("rank_raw")
+                    + F.when(is_target, F.lit(residue_val)).otherwise(F.lit(0))
+                ).alias("rank_scaled"),
+            )
+            dangling_val = int(got["dangling"]) + (residue_val if target_dangling else 0)
+        return rs.keep(rs.checkpoint(ranks, held))
 
 
 def pagerank_conserving(
@@ -469,7 +614,7 @@ def pagerank_conserving(
 ) -> DataFrame:
     """PageRank that conserves rank mass EXACTLY: after every round
     ``sum(rank_scaled) == scale``, still in pure bigint arithmetic
-    (SCALE.md §8's sketch, realized in r4).
+    (SCALE.md §8's sketch).
 
     Two additions over :func:`pagerank_scaled`:
 
@@ -485,148 +630,13 @@ def pagerank_conserving(
       per round (bounded by the number of truncations), so it never
       meaningfully distorts the distribution.
 
-    Costs one extra global agg per round (the residue) plus the
-    dangling sum, and eagerly checkpoints each round because the rank
-    relation is read by several singleton aggregates — use
-    :func:`pagerank_scaled` when exact conservation isn't needed.
-    Helper relations and superseded per-round checkpoints are released
-    before returning; the ONE retained materialization is the returned
-    result itself (eagerly checkpointed, lineage-free) — call
-    :func:`parcialbigdata_spark.session.release_checkpoint` on it when
-    done to release its cached partitions (plain ``unpersist()`` cannot
-    see a checkpoint's backing RDD)."""
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+    Costs one eager checkpoint per round because the rank relation is
+    read by several aggregates — use :func:`pagerank_scaled` when exact
+    conservation isn't needed. The returned result is eagerly
+    checkpointed; free it with ``release_checkpoint``."""
+    return _pagerank_exact(
+        edges, None, src, dst, iterations, damping_pct, scale, assume_distinct
     )
-    base_nodes = (
-        nodes.join(deg.withColumnRenamed("src", "node"), "node", "left")
-        .fillna({"out_degree": 0})
-        .persist()
-    )
-    # Graph-global params come to the driver ONCE (one bounded-row
-    # first() over the persisted node relation — r14); base/init use
-    # Python // which equals SQL DIV on these non-negative ints, so
-    # every downstream integer is unchanged.
-    prow = base_nodes.agg(
-        F.count(F.lit(1)).alias("n"), F.min("node").alias("min_node")
-    ).first()
-    n_nodes = int(prow["n"])
-    if n_nodes == 0:  # empty graph: empty result, same schema
-        out = base_nodes.select(
-            "node", "out_degree", F.lit(0).cast("bigint").alias("rank_scaled")
-        ).localCheckpoint(eager=True)
-        e.unpersist()
-        base_nodes.unpersist()
-        return out
-    min_node = int(prow["min_node"])
-    base_val = (((100 - damping_pct) * scale) // 100) // n_nodes
-    init_val = scale // n_nodes
-    is_min = F.col("node") == F.lit(min_node)
-    # Init already conserves: the DIV shortfall of scale/n goes to the
-    # minimum node, same rule as every later round. One job per round
-    # (r14 — the connected_components observe discipline, see
-    # pagerank_personalized): the dangling sum and residue ride each
-    # round's eager-checkpoint materialization as CollectMetrics and
-    # re-enter as literals; the r13 shape paid two singleton aggregate
-    # jobs plus broadcast builds per round for the same integers.
-    obs0 = Observation("pr_cons_init")
-    ranks = (
-        base_nodes.select(
-            "node",
-            "out_degree",
-            (
-                F.lit(init_val)
-                + F.when(
-                    is_min, F.lit(scale - init_val * n_nodes)
-                ).otherwise(F.lit(0))
-            ).cast("bigint").alias("rank_scaled"),
-        )
-        .observe(
-            obs0,
-            F.coalesce(
-                F.sum(F.when(F.col("out_degree") == 0, F.col("rank_scaled"))),
-                F.lit(0).cast("bigint"),
-            ).alias("dangling"),
-            F.max(F.when(is_min, F.col("out_degree"))).alias("min_od"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    got0 = obs0.get
-    dangling_val = int(got0["dangling"])
-    min_dangling = got0["min_od"] is not None and int(got0["min_od"]) == 0
-    # Each round's eager checkpoint supersedes the previous one; the
-    # superseded checkpoint's cached partitions are released as soon as
-    # the successor is materialized, so repeated calls never grow the
-    # persisted-RDD set (ADVICE r3 cache-leak discipline).
-    prev_ckpt = ranks
-    for it in range(iterations):
-        contrib = (
-            e.join(
-                ranks.filter(F.col("out_degree") > 0).select(
-                    F.col("node").alias("src"), "out_degree", "rank_scaled"
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_scaled DIV out_degree").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        obs = Observation(f"pr_cons_round_{it}")
-        raw = (
-            ranks.join(contrib, "node", "left")
-            .fillna({"inflow": 0})
-            .select(
-                "node",
-                "out_degree",
-                F.expr(
-                    f"{base_val}L + ({damping_pct}L *"
-                    f" (inflow + {dangling_val}L DIV {n_nodes}L)) DIV 100"
-                ).alias("rank_raw"),
-            )
-            .observe(
-                obs,
-                F.coalesce(F.sum("rank_raw"), F.lit(0).cast("bigint")).alias(
-                    "s_raw"
-                ),
-                F.coalesce(
-                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank_raw"))),
-                    F.lit(0).cast("bigint"),
-                ).alias("s_dangling"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        got = obs.get
-        residue_val = scale - int(got["s_raw"])
-        release_checkpoint(prev_ckpt)
-        prev_ckpt = raw
-        ranks = raw.select(
-            "node",
-            "out_degree",
-            (
-                F.col("rank_raw")
-                + F.when(is_min, F.lit(residue_val)).otherwise(F.lit(0))
-            ).alias("rank_scaled"),
-        )
-        dangling_val = int(got["s_dangling"]) + (
-            residue_val if min_dangling else 0
-        )
-    ranks = ranks.select("node", "out_degree", "rank_scaled").localCheckpoint(eager=True)
-    release_checkpoint(prev_ckpt)
-    e.unpersist()
-    base_nodes.unpersist()
-    return ranks
 
 
 def pagerank_personalized(
@@ -648,123 +658,14 @@ def pagerank_personalized(
     (``sum(rank_scaled) == scale`` after every round), with all three
     global mass flows routed to the seed instead of spread uniformly:
     teleport ``(100-d)%·scale``, the dangling sum (damped), and the
-    integral-DIV residue all land on the seed node.  Initial mass is
-    entirely at the seed (standard PPR power iteration).
-
-    One job per round (r14 — the :func:`connected_components`
-    ``observe`` discipline applied to PR): the dangling sum and the
-    residue both ride the round's eager-checkpoint materialization as
-    CollectMetrics and come back as driver INTS, injected into the
-    next round as literals — the r13 shape ran two extra singleton
-    aggregate jobs plus their broadcast builds per round for the same
-    integers. Arithmetic (and the chained-CTE oracle parity) is
-    bit-unchanged: the same bigint sums feed the same DIV chain. The
-    one retained materialization is the returned result
-    (``release_checkpoint`` to free)."""
-    if iterations < 1:
-        raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = e.persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
+    integral-DIV residue all land on the seed node. Initial mass is
+    entirely at the seed (standard PPR power iteration). Raises
+    ``ValueError`` if ``seed`` is not a node of the graph, where no
+    rank could hold the mass. The returned result is eagerly
+    checkpointed; free it with ``release_checkpoint``."""
+    return _pagerank_exact(
+        edges, seed, src, dst, iterations, damping_pct, scale, assume_distinct
     )
-    base_nodes = (
-        nodes.join(deg.withColumnRenamed("src", "node"), "node", "left")
-        .fillna({"out_degree": 0})
-        .persist()
-    )
-    is_seed = F.col("node") == F.lit(seed)
-    obs0 = Observation("ppr_init")
-    ranks = (
-        base_nodes.select(
-            "node",
-            "out_degree",
-            F.when(is_seed, F.lit(scale)).otherwise(F.lit(0)).cast("bigint").alias(
-                "rank_scaled"
-            ),
-        )
-        .observe(
-            obs0,
-            F.coalesce(
-                F.sum(F.when(F.col("out_degree") == 0, F.col("rank_scaled"))),
-                F.lit(0).cast("bigint"),
-            ).alias("dangling"),
-            # Whether the seed itself is dangling decides where the
-            # residue mass lands in NEXT round's dangling sum.
-            F.max(F.when(is_seed, F.col("out_degree"))).alias("seed_od"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    got0 = obs0.get
-    dangling_val = int(got0["dangling"])
-    seed_dangling = got0["seed_od"] is not None and int(got0["seed_od"]) == 0
-    teleport = ((100 - damping_pct) * scale) // 100
-    prev_ckpt = ranks
-    for it in range(iterations):
-        contrib = (
-            e.join(
-                ranks.filter(F.col("out_degree") > 0).select(
-                    F.col("node").alias("src"), "out_degree", "rank_scaled"
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_scaled DIV out_degree").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        obs = Observation(f"ppr_round_{it}")
-        raw = (
-            ranks.join(contrib, "node", "left")
-            .fillna({"inflow": 0})
-            .select(
-                "node",
-                "out_degree",
-                F.expr(
-                    f"({damping_pct}L * inflow) DIV 100"
-                    f" + CASE WHEN node = {seed}L THEN {teleport}L"
-                    f" + ({damping_pct}L * {dangling_val}L) DIV 100 ELSE 0L END"
-                ).alias("rank_raw"),
-            )
-            .observe(
-                obs,
-                F.coalesce(F.sum("rank_raw"), F.lit(0).cast("bigint")).alias(
-                    "s_raw"
-                ),
-                F.coalesce(
-                    F.sum(F.when(F.col("out_degree") == 0, F.col("rank_raw"))),
-                    F.lit(0).cast("bigint"),
-                ).alias("s_dangling"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        got = obs.get
-        residue_val = scale - int(got["s_raw"])
-        release_checkpoint(prev_ckpt)
-        prev_ckpt = raw
-        ranks = raw.select(
-            "node",
-            "out_degree",
-            (
-                F.col("rank_raw")
-                + F.when(is_seed, F.lit(residue_val)).otherwise(F.lit(0))
-            ).alias("rank_scaled"),
-        )
-        dangling_val = int(got["s_dangling"]) + (
-            residue_val if seed_dangling else 0
-        )
-    ranks = ranks.select("node", "out_degree", "rank_scaled").localCheckpoint(eager=True)
-    release_checkpoint(prev_ckpt)
-    e.unpersist()
-    base_nodes.unpersist()
-    return ranks
 
 
 def triangle_stats(
@@ -860,38 +761,28 @@ def shortest_paths(
 
     Unreachable nodes are absent from the result (no sentinel).
     Terminates when the frontier empties; raises after ``max_iter``
-    rounds (bound = graph diameter). Same storage discipline as
-    :func:`connected_components`: per-round checkpoints are released
-    as soon as they are superseded; the returned settled relation is
-    the one retained materialization
-    (``session.release_checkpoint`` to free)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    settled = spark.createDataFrame(
-        [(source, 0)], "node BIGINT, dist INT"
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    prev_settled, prev_frontier = settled, None
-    for it in range(1, max_iter + 1):
-        cand = (
-            frontier.join(e, frontier.node == e.src)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+    rounds (bound = graph diameter). The returned settled relation is
+    eagerly checkpointed; free it with ``release_checkpoint``."""
+    with _RoundState() as rs:
+        e = rs.checkpoint(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
         )
-        new = cand.join(settled, "node", "left_anti")
-        settled = settled.unionAll(new).localCheckpoint(eager=True)
-        frontier = new.localCheckpoint(eager=True)
-        n_new = frontier.count()
-        release_checkpoint(prev_settled)
-        if prev_frontier is not None:
-            release_checkpoint(prev_frontier)
-        prev_settled, prev_frontier = settled, frontier
-        if n_new == 0:
-            release_checkpoint(e)
-            release_checkpoint(frontier)
-            return settled
+        settled = frontier = rs.checkpoint(
+            edges.sparkSession.createDataFrame([(source, 0)], "node BIGINT, dist INT")
+        )
+        for _ in range(max_iter):
+            cand = (
+                frontier.join(e, frontier.node == e.src)
+                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+            )
+            new = cand.join(settled, "node", "left_anti")
+            grown = rs.checkpoint(settled.unionAll(new))
+            frontier = rs.checkpoint(new, settled, frontier)
+            settled = grown
+            if frontier.count() == 0:
+                return rs.keep(settled)
     raise RuntimeError(f"shortest_paths did not converge in {max_iter} rounds")
 
 
@@ -910,13 +801,11 @@ def kcore(
     Returns (node, core_degree): the surviving nodes with their degree
     INSIDE the core. Each round is one degree aggregation plus two
     semi-joins of the edge relation against the surviving-node set —
-    all keyed on node ids, so AQE reuses the exchanges; per-round
-    ``localCheckpoint`` + release keeps lineage flat and executor
-    storage bounded exactly like :func:`connected_components`. Rounds
-    are bounded by the peel depth (small in practice: each round
-    removes every node currently below k, not one node at a time). At
-    100 TB each round is O(|E|) shuffle work — the standard
-    degeneracy-ordering alternative is inherently sequential.
+    all keyed on node ids, so AQE reuses the exchanges. Rounds are
+    bounded by the peel depth (small in practice: each round removes
+    every node currently below k, not one node at a time). At 100 TB
+    each round is O(|E|) shuffle work — the standard degeneracy-ordering
+    alternative is inherently sequential.
 
     The input is treated as UNDIRECTED: edges are symmetrized and
     self-loops dropped before the first degree count."""
@@ -926,34 +815,29 @@ def kcore(
         .distinct()
     )
     e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.localCheckpoint(eager=True)
-    prev = e
-    n_prev = e.count()
-    for _ in range(max_iter):
-        deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("a")
-        e2 = (
-            e.join(keep, "a", "left_semi")
-            .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        # One action per round: this round's count is next round's
-        # n_prev (the checkpoint pins the relation, so it can't drift).
-        n_now = e2.count()
-        release_checkpoint(prev)
-        prev = e = e2
-        if n_now == n_prev:
-            break
-        n_prev = n_now
-    else:
-        release_checkpoint(e)  # same retry-leak hygiene as the CC loop
-        raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
-    return (
-        e.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(F.col("a").alias("node"), "core_degree")
-    )
+    with _RoundState() as rs:
+        e = rs.checkpoint(e)
+        n_prev = e.count()
+        for _ in range(max_iter):
+            deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+            keep = deg.filter(F.col("deg") >= k).select("a")
+            e = rs.checkpoint(
+                e.join(keep, "a", "left_semi")
+                .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
+                .select("a", "b"),
+                e,
+            )
+            # One action per round: this round's count is next round's
+            # n_prev (the checkpoint pins the relation, so it can't drift).
+            n_now = e.count()
+            if n_now == n_prev:
+                return (
+                    rs.keep(e).groupBy("a")
+                    .agg(F.count(F.lit(1)).alias("core_degree"))
+                    .select(F.col("a").alias("node"), "core_degree")
+                )
+            n_prev = n_now
+    raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
 
 
 def neighborhood_overlap(
@@ -1059,13 +943,11 @@ def label_propagation(
     top-1 — expressed as a ``min_by`` HASH aggregation over the
     ordering struct ``(−cnt, label)`` rather than a row_number sort
     window, so no per-round sort and both aggs combine map-side; all
-    shuffles keyed on node id, linear in |E|, the same per-round
-    discipline as :func:`connected_components`; rounds are a
-    constant, not data-dependent. Celebrity-node vote counting is
+    shuffles keyed on node id, linear in |E|; rounds are a constant,
+    not data-dependent. Celebrity-node vote counting is
     groupBy-combined, so skew lands on the combiner, not a single
-    reducer. Per-round ``localCheckpoint`` + release keeps lineage
-    flat and executor storage bounded. The input is treated as
-    UNDIRECTED: edges are symmetrized and self-loops dropped.
+    reducer. The input is treated as UNDIRECTED: edges are symmetrized
+    and self-loops dropped.
 
     Returns (node, community) for every node with at least one edge;
     ``community`` is the surviving label (a node id)."""
@@ -1075,35 +957,31 @@ def label_propagation(
         .distinct()
     )
     e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.localCheckpoint(eager=True)
-    labels = (
-        e.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        nbr = e.join(
-            labels.select(F.col("node").alias("b"), "label"), "b"
-        ).select(F.col("a").alias("node"), "label")
-        votes = nbr.unionByName(labels)
-        # min over (−cnt, label) = max count with min-label tie-break
-        # (cnt ≥ 1, so the negation can't overflow; labels are distinct
-        # per node group, so the struct order is total and the pick
-        # deterministic).
-        new_labels = (
-            votes.groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("node")
-            .agg(
-                F.min_by(
-                    F.col("label"), F.struct((-F.col("cnt")), F.col("label"))
-                ).alias("label")
-            )
-            .localCheckpoint(eager=True)
+    with _RoundState() as rs:
+        e = rs.checkpoint(e)
+        labels = rs.checkpoint(
+            e.select(F.col("a").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
         )
-        release_checkpoint(labels)
-        labels = new_labels
-    out = labels.select("node", F.col("label").alias("community"))
-    release_checkpoint(e)
-    return out
+        for _ in range(rounds):
+            nbr = e.join(
+                labels.select(F.col("node").alias("b"), "label"), "b"
+            ).select(F.col("a").alias("node"), "label")
+            votes = nbr.unionByName(labels)
+            # min over (−cnt, label) = max count with min-label tie-break
+            # (cnt ≥ 1, so the negation can't overflow; labels are distinct
+            # per node group, so the struct order is total and the pick
+            # deterministic).
+            labels = rs.checkpoint(
+                votes.groupBy("node", "label")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .groupBy("node")
+                .agg(
+                    F.min_by(
+                        F.col("label"), F.struct((-F.col("cnt")), F.col("label"))
+                    ).alias("label")
+                ),
+                labels,
+            )
+        return rs.keep(labels).select("node", F.col("label").alias("community"))

@@ -306,17 +306,41 @@ def test_connected_components_assume_distinct_identical(spark):
     assert base == fast == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_nonconvergence_raises(spark):
-    import pytest
+def _n_persisted(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
+
+@pytest.mark.parametrize("algorithm", ["label", "star"])
+def test_connected_components_nonconvergence_raises(spark, algorithm):
+    """A capped run raises, and releases its round state first: a caller
+    that catches and retries must not accumulate checkpoint RDDs."""
     from parcialbigdata_spark.operators.graph import connected_components
 
-    # A 6-chain needs ~5 rounds of min-propagation; cap at 1 must raise.
+    # A 6-chain needs ~5 rounds of min-propagation and more than one
+    # star alternation; cap at 1 must raise.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 7)], ["id_a", "id_b"]
     )
+    before = _n_persisted(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=1)
+        connected_components(pairs, max_iter=1, algorithm=algorithm)
+    assert _n_persisted(spark) <= before, "round state leaked on failure"
+
+
+def test_shortest_paths_nonconvergence_raises(spark):
+    """SSSP capped below the diameter raises and releases its round
+    state, like the CC loops above."""
+    from parcialbigdata_spark.operators.graph import shortest_paths
+
+    # Directed 1 -> 2 -> ... -> 7: the frontier is still non-empty
+    # after two rounds.
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 7)], "src BIGINT, dst BIGINT"
+    )
+    before = _n_persisted(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        shortest_paths(edges, source=1, max_iter=2)
+    assert _n_persisted(spark) <= before, "round state leaked on failure"
 
 
 def test_connected_components_random_graphs_match_union_find(spark):

@@ -9,6 +9,7 @@ test so a hypothesis run doesn't spawn hundreds of jobs.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -525,13 +526,14 @@ def test_pagerank_conserving_sums_to_scale(spark):
 
 
 def test_pagerank_unpersists_helpers(spark):
-    """pagerank_scaled / pagerank_conserving release their cached edge
-    and degree relations AND every superseded per-round checkpoint
-    (ADVICE r3): repeated calls must not grow the set of persisted
-    RDDs.  pagerank_conserving retains exactly one materialization —
-    the returned, lineage-free result — which the caller contract says
-    to release via ``session.release_checkpoint`` when done (exercised
-    here; plain ``unpersist()`` cannot see a checkpoint's backing RDD).
+    """pagerank_scaled / pagerank_conserving / pagerank_personalized
+    release their cached edge and degree relations AND every superseded
+    per-round checkpoint (ADVICE r3): repeated calls must not grow the
+    set of persisted RDDs.  The conserving PageRanks retain exactly one
+    materialization — the returned, lineage-free result — which the
+    caller contract says to release via ``session.release_checkpoint``
+    when done (exercised here; plain ``unpersist()`` cannot see a
+    checkpoint's backing RDD).
     Enough iterations are used that pagerank_scaled crosses its
     checkpoint_interval and the superseded-checkpoint release path
     actually runs."""
@@ -556,6 +558,9 @@ def test_pagerank_unpersists_helpers(spark):
         conserving = graph.pagerank_conserving(edges, iterations=2)
         conserving.count()
         release_checkpoint(conserving)
+        personalized = graph.pagerank_personalized(edges, seed=1, iterations=2)
+        personalized.count()
+        release_checkpoint(personalized)
     assert n_cached() <= after_first, (
         "persisted RDDs accumulate across pagerank calls"
     )
@@ -586,6 +591,98 @@ def test_connected_components_release_superseded_checkpoints(spark):
     assert n_cached() <= base_star + 2  # final E + nodes per call
 
 
+def test_kcore_and_lpa_release_superseded_checkpoints(spark):
+    """k-core and label propagation release per-round checkpoints as
+    they are superseded: repeated runs grow the persisted-RDD set by at
+    most the one relation each returned plan reads."""
+    from parcialbigdata_spark.operators import graph
+
+    def n_cached() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    # Triangle 1-2-3 with a tail 3-4-5: the 2-core peels 5, then 4.
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src BIGINT, dst BIGINT"
+    )
+    core = {r.node: r.core_degree for r in graph.kcore(edges, k=2).collect()}
+    assert core == {1: 2, 2: 2, 3: 2}
+    base_kcore = n_cached()
+    graph.kcore(edges, k=2).count()
+    assert n_cached() <= base_kcore + 1  # final peeled edges per call
+
+    graph.label_propagation(edges, rounds=3).count()
+    base_lpa = n_cached()
+    graph.label_propagation(edges, rounds=3).count()
+    assert n_cached() <= base_lpa + 1  # final labels per call
+
+
+def _graph_job_cases(spark):
+    """Small fixed graphs, one call per iterative loop of graph.py."""
+    from parcialbigdata_spark.operators import graph
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
+        "id_a BIGINT, id_b BIGINT",
+    )
+    dangling = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "src BIGINT, dst BIGINT")
+    split = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src BIGINT, dst BIGINT")
+    und = [(1, 2), (2, 3), (3, 4), (4, 5), (3, 10), (20, 21)]
+    bfs = spark.createDataFrame(und + [(b, a) for a, b in und], "src BIGINT, dst BIGINT")
+    tail = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src BIGINT, dst BIGINT"
+    )
+    return {
+        "connected_components_label": lambda: graph.connected_components(pairs),
+        "connected_components_star": lambda: graph.connected_components(
+            pairs, algorithm="star"
+        ),
+        "pagerank_conserving": lambda: graph.pagerank_conserving(dangling, iterations=2),
+        "pagerank_personalized": lambda: graph.pagerank_personalized(
+            split, seed=1, iterations=2
+        ),
+        "shortest_paths": lambda: graph.shortest_paths(bfs, source=1),
+        "kcore": lambda: graph.kcore(tail, k=2),
+        "label_propagation": lambda: graph.label_propagation(tail, rounds=3),
+    }
+
+
+#: Spark jobs each call submits before it returns (its eager checkpoints,
+#: parameter reads, probes and counts) on the graphs above. A different
+#: count means a loop gained or lost an action per round.
+_GRAPH_JOBS_PER_CALL = {
+    "connected_components_label": 19,
+    "connected_components_star": 58,
+    "pagerank_conserving": 20,
+    "pagerank_personalized": 18,
+    "shortest_paths": 83,
+    "kcore": 26,
+    "label_propagation": 23,
+}
+
+
+@pytest.mark.parametrize("case", sorted(_GRAPH_JOBS_PER_CALL))
+def test_graph_loop_jobs_per_call_pinned(spark, case):
+    """Each iterative graph loop submits a fixed number of jobs, counted
+    under the call's own job group."""
+    import uuid
+
+    from parcialbigdata_spark.session import release_checkpoint
+
+    call = _graph_job_cases(spark)[case]
+    sc = spark.sparkContext
+    group = f"graph-jobs-{case}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, case)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    release_checkpoint(out)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == _GRAPH_JOBS_PER_CALL[case], f"{case}: {jobs} jobs per call"
+
+
 def test_ppr_conserves_and_localizes_to_seed_component(spark):
     """Personalized PageRank: exact mass conservation at every
     iteration count, and nodes unreachable from the seed hold exactly
@@ -608,6 +705,13 @@ def test_ppr_conserves_and_localizes_to_seed_component(spark):
         assert rows[10] == 0 and rows[11] == 0
         assert rows[1] > 0  # teleport keeps the seed charged
         release_checkpoint(ranks)
+
+    # A seed outside the graph could hold no mass, so the sum contract
+    # cannot be met: raise, with the round state already released.
+    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="seed 999"):
+        graph.pagerank_personalized(edges, seed=999, scale=scale)
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= before
 
 
 def test_pareto_front_2d_random_vs_bruteforce(spark):
