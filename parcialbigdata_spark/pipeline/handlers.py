@@ -18,7 +18,7 @@ from pyspark.sql import SparkSession
 
 from parcialbigdata_spark.pipeline.fetch import fetch_pages
 from parcialbigdata_spark.pipeline.parse import compat_view, exploded_cards
-from parcialbigdata_spark.pipeline.sink import csv_bytes
+from parcialbigdata_spark.pipeline.sink import csv_bytes, guard_compat_size
 from parcialbigdata_spark.pipeline.storage import LocalObjectStore
 
 #: Swap-able default store (reference: download_lambda.py:10).
@@ -44,8 +44,9 @@ def process_handler(event, context=None, *, spark: SparkSession | None = None, s
 
     The extraction runs through the same Spark stages as the batch and
     streaming pipelines (``exploded_cards`` → ``compat_view``); one
-    event = one file, so collecting its rows for the in-memory CSV
-    matches the reference's StringIO buffer (``:122-128``).
+    event = one file, so its rows come back in one bounded collect
+    (:func:`~parcialbigdata_spark.pipeline.sink.guard_compat_size`) for
+    the in-memory CSV, like the reference's StringIO buffer (``:122-128``).
     """
     record = event["Records"][0]
     source_bucket = record["s3"]["bucket"]["name"]
@@ -56,7 +57,7 @@ def process_handler(event, context=None, *, spark: SparkSession | None = None, s
 
     spark = spark or SparkSession.builder.getOrCreate()
     raw = spark.createDataFrame([(object_key, html_content)], "source_file string, value string")
-    rows = [tuple(r) for r in compat_view(exploded_cards(raw)).collect()]
+    rows = guard_compat_size(compat_view(exploded_cards(raw)))
 
     if not rows:
         print("No se encontraron listados con la clase 'listing-card__content'")

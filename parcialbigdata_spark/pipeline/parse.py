@@ -3,8 +3,9 @@
 Spark shape (SURVEY.md §3.3): whole-file text scan → Arrow-batched
 pandas UDF returning ``array<struct>`` of card fields → ``explode`` →
 typed projection. Narrow transforms only — this pipeline needs ZERO
-shuffles at any scale; throughput scales linearly with executors and the
-only Python cost is the parse UDF, amortized per whole file.
+shuffles at any scale, its CSV sinks included (batch, per-event and
+streaming); throughput scales linearly with executors and the only
+Python cost is the parse UDF, amortized per whole file.
 
 Three layers:
 

@@ -5,10 +5,11 @@
   ``<name>.html`` file (key rewrite, ``:132``), header row first
   (``:124-127``), serialized like ``csv.writer`` over ``StringIO``
   (``:122-128``, CRLF line endings included). A per-file listing set is
-  tiny (≤ 10 pages of cards), so materializing one file's rows on the
-  driver mirrors the reference's in-memory buffer without a scale risk —
-  the *number of files* scales, not the per-file row count, and files
-  are independent.
+  tiny (≤ 10 pages of cards), so the driver-side sinks (this one, the
+  streaming twin and ``process_handler``) take their rows with ONE
+  bounded collect, :func:`guard_compat_size`, and split them by date on
+  the driver — no per-date jobs, no shuffle. The bound makes a
+  corpus-scale relation fail loudly before anything is written.
 
 - :func:`write_csv_distributed` — the 100 TB path: plain distributed
   ``DataFrameWriter.csv`` with a header per part-file, partitioned by
@@ -21,7 +22,6 @@ import csv
 from io import StringIO
 
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 
 from parcialbigdata_spark.pipeline.parse import CSV_COLUMNS
 
@@ -34,20 +34,24 @@ from parcialbigdata_spark.pipeline.parse import CSV_COLUMNS
 COMPAT_SINK_MAX_ROWS = 100_000
 
 
-def guard_compat_size(compat: DataFrame, max_rows: int = COMPAT_SINK_MAX_ROWS) -> None:
-    """Refuse to drive-collect an oversized compat relation.
+def guard_compat_size(compat: DataFrame, max_rows: int | None = None) -> list[tuple]:
+    """The one bounded collect of the driver-side CSV sinks: return
+    ``compat``'s rows in document order, or raise if there are more than
+    ``max_rows`` (default :data:`COMPAT_SINK_MAX_ROWS`, read per call).
 
-    ``limit(max_rows + 1).count()`` bounds the probe itself — Spark
-    stops scanning after max_rows+1 rows, so the guard never pays a full
-    count of the oversized input it is rejecting. Route large relations
-    through :func:`write_csv_distributed` instead."""
-    n = compat.limit(max_rows + 1).count()
-    if n > max_rows:
+    ``limit(max_rows + 1).collect()`` stops scanning once the bound is
+    exceeded, so an oversized input is rejected without a full scan and
+    before any object is written. Route large relations through
+    :func:`write_csv_distributed` instead."""
+    max_rows = COMPAT_SINK_MAX_ROWS if max_rows is None else max_rows
+    rows = compat.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
         raise ValueError(
             f"compat relation exceeds {max_rows} rows; the per-file CSV "
             "sink is the driver-side fidelity path for small per-date "
             "batches - use write_csv_distributed for corpus-scale output"
         )
+    return [tuple(r) for r in rows]
 
 
 def csv_bytes(rows: list[tuple]) -> str:
@@ -66,19 +70,24 @@ def write_csv_per_source(compat: DataFrame, store, dest_bucket: str) -> list[str
     ``compat`` is the :func:`~parcialbigdata_spark.pipeline.parse.compat_view`
     relation; ``store`` is any object with the ``put_object`` surface
     (reference: s3_client.put_object, download_lambda.py:133-138).
-    Returns the keys written.
+    Returns the keys written, in date order; each object holds its
+    date's rows in document order.
     """
-    guard_compat_size(compat)
+    return _put_by_date(guard_compat_size(compat), store, dest_bucket)
+
+
+def _put_by_date(rows: list[tuple], store, dest_bucket: str) -> list[str]:
+    """Write collected compat rows as one ``<date>.csv`` per
+    ``FechaDescarga`` (column 0): dates sorted, each date's rows in the
+    order collected. Returns the keys written."""
+    by_date: dict[str, list[tuple]] = {}
+    for row in rows:
+        by_date.setdefault(row[0], []).append(row)
     keys: list[str] = []
-    dates = [r[0] for r in compat.select("FechaDescarga").distinct().orderBy("FechaDescarga").collect()]
-    for fecha in dates:
-        rows = [
-            tuple(r)
-            for r in compat.filter(F.col("FechaDescarga") == fecha).collect()
-        ]
+    for fecha in sorted(by_date):
         key = f"{fecha}.csv"
         store.put_object(
-            Bucket=dest_bucket, Key=key, Body=csv_bytes(rows), ContentType="text/csv"
+            Bucket=dest_bucket, Key=key, Body=csv_bytes(by_date[fecha]), ContentType="text/csv"
         )
         keys.append(key)
     return keys

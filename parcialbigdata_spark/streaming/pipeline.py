@@ -10,6 +10,9 @@ the engine instead of hand-wired cloud events.
 
 - E1 (incremental, exactly-once per file): ``readStream`` + checkpoint;
   the ``foreachBatch`` sink writes one ``<name>.csv`` per input file.
+  Per micro-batch it runs one file-list job plus one bounded collect of
+  the parsed rows, whatever the file count: no per-file jobs and no
+  shuffle.
 - E2 (scheduled micro-batch / cron): ``trigger(availableNow=True)`` —
   process everything outstanding, then stop; an external scheduler
   (the reference's weekly cron, zappa_settings.json:23-27) re-runs it.
@@ -26,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from parcialbigdata_spark.pipeline.parse import compat_view, exploded_cards
-from parcialbigdata_spark.pipeline.sink import csv_bytes, guard_compat_size
+from parcialbigdata_spark.pipeline.sink import _put_by_date, guard_compat_size
 from parcialbigdata_spark.pipeline.storage import LocalObjectStore
 
 
@@ -48,45 +51,26 @@ def read_landing_stream(
 
 def _csv_batch_writer(store: LocalObjectStore, dest_bucket: str, error_bucket: str):
     """foreachBatch body: per input file in the micro-batch, either one
-    header CSV (the faithful 1-in/1-out contract) or one error record."""
+    header CSV (the faithful 1-in/1-out contract) or one error record.
+    The bound check of :func:`~parcialbigdata_spark.pipeline.sink.guard_compat_size`
+    runs before anything is written."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        raw_files = [r[0] for r in batch_df.select("source_file").distinct().collect()]
-        cards = exploded_cards(batch_df)
-        compat = compat_view(cards).persist()
-        try:
-            parsed_files = set()
-            for fecha, rows in _rows_by_file(compat):
-                parsed_files.add(f"{fecha}.html")
+        raw_files = dict.fromkeys(r[0] for r in batch_df.select("source_file").collect())
+        rows = guard_compat_size(compat_view(exploded_cards(batch_df)))
+        _put_by_date(rows, store, dest_bucket)
+        parsed_files = {f"{row[0]}.html" for row in rows}
+        for f in raw_files:
+            if f not in parsed_files:  # zero cards → error side-channel
                 store.put_object(
-                    Bucket=dest_bucket,
-                    Key=f"{fecha}.csv",
-                    Body=csv_bytes(rows),
-                    ContentType="text/csv",
+                    Bucket=error_bucket,
+                    Key=f.replace(".html", ".error.json"),
+                    Body='{"status": "error", "message": "No listings found", '
+                    f'"source": "{f}"}}',
+                    ContentType="application/json",
                 )
-            for f in raw_files:
-                if f not in parsed_files:  # zero cards → error side-channel
-                    store.put_object(
-                        Bucket=error_bucket,
-                        Key=f.replace(".html", ".error.json"),
-                        Body='{"status": "error", "message": "No listings found", '
-                        f'"source": "{f}"}}',
-                        ContentType="application/json",
-                    )
-        finally:
-            compat.unpersist()
 
     return write_batch
-
-
-def _rows_by_file(compat: DataFrame):
-    guard_compat_size(compat)  # micro-batches are per-file-small by contract
-    dates = [r[0] for r in compat.select("FechaDescarga").distinct().collect()]
-    for fecha in sorted(dates):
-        rows = [
-            tuple(r) for r in compat.filter(F.col("FechaDescarga") == fecha).collect()
-        ]
-        yield fecha, rows
 
 
 def stream_landing_to_csv(

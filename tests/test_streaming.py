@@ -6,6 +6,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
+from parcialbigdata_spark.pipeline import compat_view, exploded_cards, process_handler, sink
 from parcialbigdata_spark.streaming import run_available_now, stream_landing_to_csv
 from tests.test_fetch import RecordingStore
 from tests.test_pipeline import GOLDEN_CARD, MISSING_FIELDS_CARD, _page
@@ -106,6 +110,101 @@ def test_checkpoint_dir_created(spark, tmp_path):
     store = RecordingStore(str(tmp_path / "store"))
     run_available_now(stream_landing_to_csv(spark, str(landing), str(ckpt), store=store))
     assert os.path.isdir(ckpt)
+
+
+def test_stream_landing_jobs_per_epoch_pinned(spark, tmp_path):
+    """One micro-batch costs a file-list job plus one bounded collect,
+    whatever its file count: no per-file (per-date) jobs."""
+    counts = {}
+    for n in (3, 12):
+        landing = tmp_path / f"landing{n}"
+        landing.mkdir()
+        for i in range(1, n):
+            (landing / f"2026-08-{i:02d}.html").write_text(_page(GOLDEN_CARD + MISSING_FIELDS_CARD))
+        (landing / f"2026-08-{n:02d}.html").write_text("<html><body>vacío</body></html>")
+        store = RecordingStore(str(tmp_path / f"store{n}"))
+        q = stream_landing_to_csv(spark, str(landing), str(tmp_path / f"ckpt{n}"), store=store)
+        run_available_now(q)
+        # streaming jobs carry the query's run id as their job group
+        counts[n] = len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+        assert sum(c["Bucket"] == "parcials" for c in store.put_calls) == n - 1
+        assert [c["Key"] for c in store.put_calls if c["Bucket"] == "errors"] == [
+            f"2026-08-{n:02d}.error.json"
+        ]
+    assert counts[3] == counts[12] <= 3, counts
+
+
+def test_stream_landing_guard_trips_before_write(spark, tmp_path, monkeypatch):
+    """The sink's row bound is read per call and checked before any
+    object is written: an over-bound micro-batch fails the query and
+    leaves no CSV behind."""
+    monkeypatch.setattr(sink, "COMPAT_SINK_MAX_ROWS", 1)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "2026-08-01.html").write_text(_page(GOLDEN_CARD + MISSING_FIELDS_CARD))
+    store = RecordingStore(str(tmp_path / "store"))
+    q = stream_landing_to_csv(spark, str(landing), str(tmp_path / "ckpt"), store=store)
+    with pytest.raises(StreamingQueryException, match="exceeds 1 rows"):
+        run_available_now(q)
+    assert q.exception() is not None
+    assert store.put_calls == []
+
+
+THIRD_CARD = """
+<div class="listing-card__content">
+  <span class="price__actual">$ 99</span>
+  <div class="listing-card__location__geo">Suba</div>
+</div>
+"""
+
+
+def test_per_file_csv_sinks_byte_identical(spark, tmp_path):
+    """process_handler, write_csv_per_source and stream_landing_to_csv
+    write the same bytes per file: header first, CRLF line endings, rows
+    in document order (which no column sort reproduces here)."""
+    files = {
+        "2026-08-03.html": _page(GOLDEN_CARD),
+        "2026-08-01.html": _page(MISSING_FIELDS_CARD + GOLDEN_CARD + THIRD_CARD),
+        "2026-08-02.html": "<html><body>vacío</body></html>",
+    }
+    expected = {
+        "2026-08-01.csv": (
+            "FechaDescarga,Barrio,Valor,NumHabitaciones,NumBanos,mts2\r\n"
+            "2026-08-01,Usaquén,N/A,N/A,N/A,N/A\r\n"
+            '2026-08-01,"Chapinero, Bogotá",$ 250.000.000,2,1,45\r\n'
+            "2026-08-01,Suba,$ 99,N/A,N/A,N/A\r\n"
+        ),
+        "2026-08-03.csv": (
+            "FechaDescarga,Barrio,Valor,NumHabitaciones,NumBanos,mts2\r\n"
+            '2026-08-03,"Chapinero, Bogotá",$ 250.000.000,2,1,45\r\n'
+        ),
+    }
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    handler_store = RecordingStore(str(tmp_path / "handler"))
+    for name, html in files.items():
+        (landing / name).write_text(html)
+        handler_store.put_object("in", name, html)
+    handler_store.put_calls.clear()
+
+    for name in files:
+        event = {"Records": [{"s3": {"bucket": {"name": "in"}, "object": {"key": name}}}]}
+        process_handler(event, spark=spark, store=handler_store)
+    by_handler = {c["Key"]: c["Body"] for c in handler_store.put_calls}
+
+    batch_store = RecordingStore(str(tmp_path / "batch"))
+    raw = spark.createDataFrame(list(files.items()), "source_file string, value string")
+    keys = sink.write_csv_per_source(compat_view(exploded_cards(raw)), batch_store, "parcials")
+    assert keys == ["2026-08-01.csv", "2026-08-03.csv"]
+    by_batch = {c["Key"]: c["Body"] for c in batch_store.put_calls}
+
+    stream_store = RecordingStore(str(tmp_path / "stream"))
+    run_available_now(
+        stream_landing_to_csv(spark, str(landing), str(tmp_path / "ckpt"), store=stream_store)
+    )
+    by_stream = {c["Key"]: c["Body"] for c in stream_store.put_calls if c["Bucket"] == "parcials"}
+
+    assert by_handler == by_batch == by_stream == expected
 
 
 def test_stream_stream_join_matches_batch(spark):
