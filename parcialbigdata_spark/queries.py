@@ -3979,10 +3979,11 @@ def _drain(sdf: DataFrame, output_mode: str = "complete", timeout: float = 180.0
     """Run a streaming DataFrame to completion (availableNow) through a
     memory sink and return the materialized result table.
 
-    Fail-loud on timeout: a query still active after ``timeout`` would
-    otherwise hand back a PARTIAL memory table — a silently wrong
-    answer with a nondeterministic row count. Every streaming query
-    routes through here, so the guard covers them all."""
+    Fail-loud on timeout (``run_available_now``): a query still active
+    after ``timeout`` would otherwise hand back a PARTIAL memory table —
+    a silently wrong answer with a nondeterministic row count."""
+    from parcialbigdata_spark.streaming import run_available_now
+
     _drain_counter[0] += 1
     name = f"__stream_result_{_drain_counter[0]}"
     q = (
@@ -3992,13 +3993,7 @@ def _drain(sdf: DataFrame, output_mode: str = "complete", timeout: float = 180.0
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError(
-            f"availableNow drain did not finish within {timeout}s; "
-            "refusing to return a partial memory-sink table"
-        )
+    run_available_now(q, timeout, name)
     return sdf.sparkSession.table(name)
 
 
@@ -8716,7 +8711,7 @@ def streaming_hll_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from parcialbigdata_spark.streaming import sketch_store
+    from parcialbigdata_spark.streaming import run_available_now, sketch_store
     from parcialbigdata_spark.streaming.windows import read_events_stream
 
     base = tempfile.mkdtemp(prefix="hll_store_")
@@ -8726,16 +8721,9 @@ def streaming_hll_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = sketch_store.stream_hll_to_store(
             read_events_stream(spark, sf_dir), store, ckpt
         )
-        q.awaitTermination(240)
-        if q.isActive:
-            # A partially-drained store would nondeterministically flip
-            # merged_within_10pct — fail loudly instead of comparing it.
-            q.stop()
-            raise RuntimeError(
-                "streaming_hll_partials: availableNow drain did not "
-                "finish within 240 s; refusing to estimate from a "
-                "partial sketch store"
-            )
+        # A partially-drained store would nondeterministically flip
+        # merged_within_10pct — the drain fails loudly instead.
+        run_available_now(q, 240, "streaming_hll_partials")
         est = sketch_store.merged_estimates(spark, store)
         exact = load_table(spark, sf_dir, "events").groupBy("event_type").agg(
             F.countDistinct("user_id").alias("exact_users")
@@ -10216,7 +10204,7 @@ def streaming_kll_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from parcialbigdata_spark.streaming import sketch_store
+    from parcialbigdata_spark.streaming import run_available_now, sketch_store
     from parcialbigdata_spark.streaming.windows import read_events_stream
 
     base = tempfile.mkdtemp(prefix="kll_store_")
@@ -10226,14 +10214,7 @@ def streaming_kll_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = sketch_store.stream_kll_to_store(
             read_events_stream(spark, sf_dir), store, ckpt
         )
-        q.awaitTermination(240)
-        if q.isActive:
-            q.stop()
-            raise RuntimeError(
-                "streaming_kll_partials: availableNow drain did not "
-                "finish within 240 s; refusing to estimate from a "
-                "partial sketch store"
-            )
+        run_available_now(q, 240, "streaming_kll_partials")
         est = sketch_store.merged_quantiles(spark, store)
         ev = load_table(spark, sf_dir, "events").select("event_type", "value")
         joined = ev.join(F.broadcast(est), "event_type")
@@ -11090,7 +11071,7 @@ def streaming_agg_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from parcialbigdata_spark.streaming import state_store
+    from parcialbigdata_spark.streaming import run_available_now, state_store
     from parcialbigdata_spark.streaming.windows import read_events_stream
 
     base = tempfile.mkdtemp(prefix="agg_state_store_")
@@ -11100,13 +11081,7 @@ def streaming_agg_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = state_store.stream_agg_state_to_store(
             read_events_stream(spark, sf_dir), store, ckpt
         )
-        q.awaitTermination(240)
-        if q.isActive:
-            q.stop()
-            raise RuntimeError(
-                "streaming_agg_state_store: availableNow drain did not "
-                "finish within 240 s; refusing to merge a partial store"
-            )
+        run_available_now(q, 240, "streaming_agg_state_store")
         merged = state_store.merged_state(spark, store).select(
             "event_type",
             F.col("n").alias("n_events"),
@@ -12659,7 +12634,7 @@ def streaming_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from parcialbigdata_spark.streaming import sketch_store
+    from parcialbigdata_spark.streaming import run_available_now, sketch_store
     from parcialbigdata_spark.streaming.windows import read_events_stream
 
     k = 50
@@ -12673,13 +12648,7 @@ def streaming_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             ckpt,
             k=k,
         )
-        q.awaitTermination(240)
-        if q.isActive:
-            q.stop()
-            raise RuntimeError(
-                "streaming_mg_heavy_hitters: availableNow drain did not "
-                "finish within 240 s; refusing to attest a partial store"
-            )
+        run_available_now(q, 240, "streaming_mg_heavy_hitters")
         est = sketch_store.merged_counters(spark, store)
         ev = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
         n_key = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_key"))
@@ -14334,11 +14303,12 @@ def streaming_dedup_index_documents(spark: SparkSession, sf_dir: str) -> DataFra
     oracle is SHARED VERBATIM with the batch twin: once the stream is
     exhausted the online answer must equal the batch replay — the
     E-family's stream/batch agreement contract applied to similarity
-    dedup. r10: each epoch's pairs land DISTRIBUTED in a per-epoch
+    dedup. Each epoch's pairs land DISTRIBUTED in a per-epoch
     overwrite parquet sink (no driver-side accumulation — pairs are
     output-sized, not constant-sized) and the returned DataFrame is a
-    read of that sink; seed-vs-append keys on ``epoch_id == 0`` so
-    checkpoint-recovered replays are idempotent for index AND output. Exact-hash streaming sibling:
+    read of that sink. The drain has no checkpoint, so every call is a
+    fresh index build whose epoch 0 seeds the index (the store
+    contract of ``streaming/pipeline.drain_index_store``). Exact-hash streaming sibling:
     ``streaming_dedup_events`` (fingerprint store,
     streaming/dedup_store.py); ingest-shape sibling:
     ``streaming_late_audit_events`` (same mtime-ordered file-stream

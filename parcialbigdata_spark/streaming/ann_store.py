@@ -12,12 +12,10 @@ side shuffles — history is never re-assigned or re-shuffled), its
 appended to the index. The first batch SEEDS the index and probes
 nothing.
 
-Built on the r10 output-idempotence discipline from day one:
-seed-vs-append keys on ``epoch_id == 0`` and each epoch's matches are
-written DISTRIBUTED to ``matches_dir/epoch_<id>/`` in overwrite mode,
-so a foreachBatch replay rewrites exactly its own directory and the
-returned DataFrame is a parquet read of the sink — no driver-side
-accumulation anywhere (matches are output-sized, k × batch rows).
+Each call is a fresh index build: the drain, the per-epoch matches
+sink and its read-back follow the store contract of
+``streaming/pipeline.drain_index_store`` (matches are output-sized,
+k × batch rows, and never collected to the driver).
 
 The centroid matrix is the INDEX DEFINITION — fit once by the caller
 (``similarity.ivf_fit_centroids`` on the seed corpus) and passed in;
@@ -28,9 +26,6 @@ index's num_hashes/bands/k_shingle).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -38,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from parcialbigdata_spark.streaming.pipeline import drain_index_store
 
 
 def run_streaming_ivf_index(
@@ -63,26 +60,19 @@ def run_streaming_ivf_index(
         ivf_index_probe,
     )
 
-    first_file = sorted(
-        f for f in os.listdir(stream_dir) if f.endswith(".parquet")
-    )[0]
-    schema = spark.read.parquet(os.path.join(stream_dir, first_file)).schema
-    if matches_dir is None:
-        matches_dir = tempfile.mkdtemp(prefix="ivf-matches-")
-    match_schema = StructType(
-        [
-            StructField("query_id", schema[id_col].dataType),
-            StructField("match_id", schema[id_col].dataType),
-            StructField("cosine_sim", DoubleType()),
-            StructField("rank", IntegerType()),
-        ]
-    )
+    def match_schema(schema):
+        return StructType(
+            [
+                StructField("query_id", schema[id_col].dataType),
+                StructField("match_id", schema[id_col].dataType),
+                StructField("cosine_sim", DoubleType()),
+                StructField("rank", IntegerType()),
+            ]
+        )
 
-    def _probe_and_ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        seed = epoch_id == 0
-        if seed:
-            m = batch_df.sparkSession.createDataFrame([], match_schema)
-        else:
+    def probe(batch_df: DataFrame, seed: bool, cache):
+        m = None
+        if not seed:
             m = ivf_index_probe(
                 batch_df,
                 cells_table,
@@ -92,10 +82,7 @@ def run_streaming_ivf_index(
                 k=k,
                 nprobe=nprobe,
             )
-        m.write.mode("overwrite").parquet(
-            os.path.join(matches_dir, f"epoch_{int(epoch_id)}")
-        )
-        ivf_index_ingest(
+        return m, lambda: ivf_index_ingest(
             batch_df,
             cells_table,
             centroids,
@@ -104,21 +91,6 @@ def run_streaming_ivf_index(
             append=not seed,
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(_probe_and_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError(
-            f"streaming ivf index drain did not finish within {timeout}s; "
-            "refusing to return a partial match set"
-        )
-    return spark.read.schema(match_schema).parquet(
-        os.path.join(matches_dir, "epoch_*")
+    return drain_index_store(
+        spark, stream_dir, matches_dir, match_schema, probe, "streaming ivf index", timeout
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from parcialbigdata_spark.functions import text as T
+from parcialbigdata_spark.streaming.pipeline import drain_index_store
 
 
 def dedup_batch_applier(store_path: str, out_path: str, id_col: str = "doc_id", text_col: str = "text"):
@@ -120,70 +121,47 @@ def run_streaming_minhash_index(
     returns — the registered query shares its oracle with the batch
     twin ``dedup_index_probe_documents``.
 
-    foreachBatch idempotence, OUTPUT INCLUDED (r10): seed-vs-append is
-    keyed on ``epoch_id == 0`` (not a driver-side flag, so a
-    checkpoint-recovered replay of batch 0 re-runs in overwrite mode
-    instead of clobbering an already-appended index), and each epoch's
-    verified pairs are written — DISTRIBUTED, never collected — to
-    ``pairs_dir/epoch_<id>/`` in overwrite mode, so a replayed batch
-    overwrites exactly its own output directory. The returned
-    DataFrame is a parquet READ of the pairs sink: pairs stay
-    output-sized and executor-resident end to end (the r9 version
-    accumulated every batch's pairs in a driver-side list — a driver
-    OOM at production dup rates). The index tables carry the
-    data-sized state; the pairs sink carries the result."""
-    import os
-    import tempfile
-
+    Each call is a fresh index build with no checkpoint: the seed epoch
+    overwrites ``bands_table``/``sets_table``, and the returned DataFrame
+    is a parquet read of the per-epoch pair dirs under ``pairs_dir``
+    (pairs stay distributed, never collected). The drain, the output
+    sink and the cache release follow the store contract of
+    :func:`~parcialbigdata_spark.streaming.pipeline.drain_index_store`."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     from parcialbigdata_spark.operators.dedup import (
+        minhash_batch_relations,
         minhash_index_ingest,
         minhash_index_probe,
+        shingle_rows,
     )
 
-    first_file = sorted(
-        f for f in os.listdir(stream_dir) if f.endswith(".parquet")
-    )[0]
-    doc_schema = spark.read.parquet(os.path.join(stream_dir, first_file)).schema
-    if pairs_dir is None:
-        pairs_dir = tempfile.mkdtemp(prefix="minhash-pairs-")
-    pair_schema = StructType(
-        [
-            StructField("new_id", doc_schema["doc_id"].dataType),
-            StructField("old_id", doc_schema["doc_id"].dataType),
-            StructField("jaccard_sim", DoubleType()),
-        ]
-    )
-
-    def _probe_and_ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        from parcialbigdata_spark.operators.dedup import (
-            minhash_batch_relations,
-            shingle_rows,
+    def pair_schema(doc_schema):
+        id_type = doc_schema["doc_id"].dataType
+        return StructType(
+            [
+                StructField("new_id", id_type),
+                StructField("old_id", id_type),
+                StructField("jaccard_sim", DoubleType()),
+            ]
         )
 
-        seed = epoch_id == 0  # replay-safe: recovery re-runs epoch 0
-        # Shingle the batch ONCE per micro-batch (r14) and, on probing
-        # epochs, derive its band/set relations ONCE too (r15): probe
-        # and ingest share all three persisted relations, so the
-        # tokenize, the 32-minhash signature fold and the collect_set
-        # each run once per micro-batch instead of once per operator
-        # call. Released before the batch commits, so no cache
-        # outlives its micro-batch. The seed epoch only ingests — the
-        # derived relations have a single consumer there, so only the
-        # shingle cache (two consumers inside ingest) is persisted.
-        rows = shingle_rows(batch_df, "doc_id", "text", k_shingle).persist()
-        caches = [rows]
-        if seed:  # nothing to probe; write the empty frame so the
-            p = batch_df.sparkSession.createDataFrame([], pair_schema)
-            ingest_kwargs = {"precomputed_rows": rows}
-        else:     # pairs read always has files + schema
+    def probe(batch_df: DataFrame, seed: bool, cache):
+        # Shingle the batch ONCE per micro-batch and, on probing epochs,
+        # derive its band/set relations ONCE too: probe and ingest share
+        # all three cached relations, so the tokenize, the 32-minhash
+        # signature fold and the collect_set each run once per
+        # micro-batch. The seed epoch only ingests — its derived
+        # relations have a single consumer, so only the shingle cache
+        # (two consumers inside ingest) is kept.
+        rows = cache(shingle_rows(batch_df, "doc_id", "text", k_shingle))
+        p = None
+        kwargs = {"precomputed_rows": rows}
+        if not seed:
             bb, sh = minhash_batch_relations(
                 rows, "doc_id", num_hashes=num_hashes, bands=bands
             )
-            bb, sh = bb.persist(), sh.persist()
-            caches += [bb, sh]
-            ingest_kwargs = {"precomputed_bands": bb, "precomputed_sets": sh}
+            kwargs = {"precomputed_bands": cache(bb), "precomputed_sets": cache(sh)}
             p = minhash_index_probe(
                 batch_df,
                 "doc_id",
@@ -195,14 +173,9 @@ def run_streaming_minhash_index(
                 bands=bands,
                 k_shingle=k_shingle,
                 precomputed_rows=rows,
-                **ingest_kwargs,
+                **kwargs,
             )
-        # Per-epoch overwrite directory == output idempotence: a
-        # foreachBatch retry rewrites its own epoch dir, no dupes.
-        p.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"epoch_{int(epoch_id)}")
-        )
-        minhash_index_ingest(
+        return p, lambda: minhash_index_ingest(
             batch_df,
             "doc_id",
             "text",
@@ -212,27 +185,9 @@ def run_streaming_minhash_index(
             bands=bands,
             k_shingle=k_shingle,
             append=not seed,
-            **ingest_kwargs,
+            **kwargs,
         )
-        for c in reversed(caches):
-            c.unpersist()  # one batch of caches per micro-batch —
-            # release, don't leak
 
-    q = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(_probe_and_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError(
-            f"streaming minhash index drain did not finish within {timeout}s; "
-            "refusing to return a partial pair set"
-        )
-    return spark.read.schema(pair_schema).parquet(
-        os.path.join(pairs_dir, "epoch_*")
+    return drain_index_store(
+        spark, stream_dir, pairs_dir, pair_schema, probe, "streaming minhash index", timeout
     )

@@ -15,12 +15,8 @@ exactly what the batch replay of ingest→probe→append returns — the
 registered query shares its oracle shape with the batch twin
 ``phash_index_probe_media``.
 
-foreachBatch idempotence, OUTPUT INCLUDED (the r10 discipline):
-seed-vs-append keys on ``epoch_id == 0`` and each epoch's pairs land
-DISTRIBUTED in ``pairs_dir/epoch_<id>/`` (overwrite mode — a replayed
-batch rewrites exactly its own directory; nothing is collected to the
-driver). At 100 TB the stream carries blobs, the index carries 4 band
-rows × ~50 bytes per file, and the decode runs once per blob ever.
+At 100 TB the stream carries blobs, the index carries 4 band rows ×
+~50 bytes per file, and the decode runs once per blob ever.
 
 Intra-batch pairs (r13, ADVICE r12): two near-dup blobs landing in
 the SAME micro-batch never meet in the batch-vs-index probe (a
@@ -30,22 +26,27 @@ including the seeding epoch 0 — additionally runs the banded
 pairs in, oriented (lexicographically later name) → new_file to stay
 deterministic.
 
-Run scoping (r13, ADVICE r12): the drain uses no checkpointLocation,
-so epoch numbering restarts at 0 every run and the seed branch
-OVERWRITES any pre-existing ``bands_table`` — each call is a fresh
-index build by contract. For the same reason a caller-supplied
-``pairs_dir`` is cleared of ``epoch_*`` output before the stream
-starts: a previous longer run's stale epochs would otherwise survive
-the per-epoch overwrite and leak into the final glob.
+Each call is a fresh index build: the drain, the per-epoch pairs sink
+(stale ``epoch_*`` output of a reused ``pairs_dir`` included) and the
+hash-cache release follow the store contract of
+``streaming/pipeline.drain_index_store``.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from parcialbigdata_spark.streaming.pipeline import drain_index_store
+
+_PAIR_SCHEMA = StructType(
+    [
+        StructField("new_file", StringType()),
+        StructField("old_file", StringType()),
+        StructField("hamming", IntegerType()),
+    ]
+)
 
 
 def run_streaming_phash_index(
@@ -66,13 +67,6 @@ def run_streaming_phash_index(
     unchanged (r13: the store is the modality-agnostic layer the
     phash-index docstrings promised, now exercised by
     ``streaming_ahash_index_media``)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from parcialbigdata_spark.operators.phash import (
         dhash_near_dups,
         phash_index_ingest,
@@ -83,75 +77,31 @@ def run_streaming_phash_index(
     if hash_fn is None:
         hash_fn = png_dhash
 
-    first_file = sorted(
-        f for f in os.listdir(stream_dir) if f.endswith(".parquet")
-    )[0]
-    blob_schema = spark.read.parquet(os.path.join(stream_dir, first_file)).schema
-    if pairs_dir is None:
-        pairs_dir = tempfile.mkdtemp(prefix="phash-pairs-")
-    else:
-        import glob as _glob
-        import shutil as _shutil
-
-        for stale in _glob.glob(os.path.join(pairs_dir, "epoch_*")):
-            _shutil.rmtree(stale, ignore_errors=True)
-    pair_schema = StructType(
-        [
-            StructField("new_file", StringType()),
-            StructField("old_file", StringType()),
-            StructField("hamming", IntegerType()),
-        ]
-    )
-
-    def _probe_and_ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        # Decode the batch ONCE per micro-batch (r15): the hash
-        # relation feeds the intra-batch self-join (both sides), the
-        # index probe and the ingest write — Spark cannot reuse the
-        # opaque decode kernel across those consumers (Python-UDF
-        # subtrees never canonicalize equal, so AQE stage reuse never
-        # fires on them), so without this persist the BLOB DECODE —
-        # the dominant cost at production media sizes — runs 2-4x per
-        # epoch. Released before the batch commits.
-        hashes = hash_fn(batch_df).persist()
-        seed = epoch_id == 0  # replay-safe: recovery re-runs epoch 0
+    def probe(batch_df: DataFrame, seed: bool, cache):
+        # Decode the batch ONCE per micro-batch: the hash relation feeds
+        # the intra-batch self-join (both sides), the index probe and the
+        # ingest write — Spark cannot reuse the opaque decode kernel
+        # across those consumers (Python-UDF subtrees never canonicalize
+        # equal, so AQE stage reuse never fires on them), so without this
+        # cache the BLOB DECODE — the dominant cost at production media
+        # sizes — runs 2-4x per epoch.
+        hashes = cache(hash_fn(batch_df))
         # intra-batch pairs: same-batch members never meet in the
         # batch-vs-index probe, so the banded self-join finds them
-        intra = dhash_near_dups(hashes, max_hamming=max_hamming).select(
+        p = dhash_near_dups(hashes, max_hamming=max_hamming).select(
             F.col("file_b").alias("new_file"),
             F.col("file_a").alias("old_file"),
             F.col("hamming").cast("int").alias("hamming"),
         )
-        if seed:
-            p = intra
-        else:
+        if not seed:
             p = phash_index_probe(
                 hashes, bands_table, max_hamming=max_hamming
             ).select(
                 "new_file", "old_file",
                 F.col("hamming").cast("int").alias("hamming"),
-            ).unionByName(intra)
-        p.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"epoch_{int(epoch_id)}")
-        )
-        phash_index_ingest(hashes, bands_table, append=not seed)
-        hashes.unpersist()  # one batch-sized hash cache per
-        # micro-batch — release, don't leak
+            ).unionByName(p)
+        return p, lambda: phash_index_ingest(hashes, bands_table, append=not seed)
 
-    q = (
-        spark.readStream.schema(blob_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-        .writeStream.foreachBatch(_probe_and_ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError(
-            f"streaming phash index drain did not finish within {timeout}s; "
-            "refusing to return a partial pair set"
-        )
-    return spark.read.schema(pair_schema).parquet(
-        os.path.join(pairs_dir, "epoch_*")
+    return drain_index_store(
+        spark, stream_dir, pairs_dir, lambda _: _PAIR_SCHEMA, probe, "streaming phash index", timeout
     )

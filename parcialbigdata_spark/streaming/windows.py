@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from parcialbigdata_spark.streaming.pipeline import run_available_now
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -512,13 +514,7 @@ def run_late_data_audit(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError(
-            f"late-data audit drain did not finish within {timeout}s; "
-            "refusing to return a partial audit"
-        )
+    run_available_now(q, timeout, "late-data audit")
     audit = spark.createDataFrame(
         audit_rows,
         "batch_id int, event_type string, n_admitted bigint, n_late bigint, "

@@ -623,39 +623,49 @@ def test_recursive_cl_diversity_catches_skew_min_l_misses(spark):
 # ------------------------------ r9: streaming minhash dedup-at-arrival
 
 
-def test_streaming_minhash_index_probes_history_only(spark, tmp_path):
-    # Three micro-batches; duplicates exist WITHIN batch 0 (a~b) and
-    # ACROSS batches (c in b1 ~ a in b0; d in b2 ~ c in b1). The online
-    # probe must emit only new-vs-history pairs: the first batch seeds
-    # silently, within-batch pairs never appear, and batch 2 sees
-    # batch 1's rows as history.
+_MINHASH_TEXT = "the quick brown fox jumps over the lazy dog again and again"
+#: Three micro-batches; duplicates exist WITHIN batch 0 (1~2) and ACROSS
+#: batches (3 in b1 ~ 1, 2 in b0; 4 in b2 ~ 1, 2, 3).
+_MINHASH_BATCHES = [
+    [(1, _MINHASH_TEXT), (2, _MINHASH_TEXT)],
+    [(3, _MINHASH_TEXT + " extra")],
+    [(4, _MINHASH_TEXT + " extra words here")],
+]
+
+
+def _minhash_stream(spark, base, batches):
+    """Write one parquet file per micro-batch under ``base/stream``; the
+    pinned mtimes give the file source the list order."""
+    import glob
     import os
+    import shutil
     import time as _time
+
+    stream_dir = os.path.join(base, "stream")
+    os.makedirs(stream_dir)
+    now = _time.time()
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(rows, "doc_id bigint, text string")
+        tmp = os.path.join(base, f"w{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        dst = os.path.join(stream_dir, f"b{i}.parquet")
+        shutil.copy(part, dst)
+        os.utime(dst, (now - 60 + 10 * i, now - 60 + 10 * i))
+    return stream_dir
+
+
+def test_streaming_minhash_index_probes_history_only(spark, tmp_path):
+    # The online probe must emit only new-vs-history pairs: the first
+    # batch seeds silently, within-batch pairs never appear, and batch 2
+    # sees batch 1's rows as history.
+    import os
 
     from parcialbigdata_spark.streaming.dedup_store import (
         run_streaming_minhash_index,
     )
 
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    batches = [
-        [(1, text), (2, text)],                 # near-dup pair inside b0
-        [(3, text + " extra")],                 # ~ matches 1 and 2
-        [(4, text + " extra words here")],      # ~ matches 1, 2, 3
-    ]
-    stream_dir = tmp_path / "stream"
-    os.makedirs(stream_dir)
-    now = _time.time()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        tmp = str(tmp_path / f"w{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        import glob
-        import shutil
-
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = str(stream_dir / f"b{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (now - 60 + 10 * i, now - 60 + 10 * i))
+    stream_dir = _minhash_stream(spark, str(tmp_path / "run1"), _MINHASH_BATCHES)
     bands_t, sets_t = "t_stream_idx_bands", "t_stream_idx_sets"
     pairs_dir = str(tmp_path / "pairs")
     # Pin the r10 scale contract: the pair path never collects to the
@@ -676,21 +686,111 @@ def test_streaming_minhash_index_probes_history_only(spark, tmp_path):
         _DF.collect = _no_collect
         try:
             pairs = run_streaming_minhash_index(
-                spark, str(stream_dir), bands_t, sets_t, threshold=0.3,
+                spark, stream_dir, bands_t, sets_t, threshold=0.3,
                 k_shingle=2, pairs_dir=pairs_dir,
             )
         finally:
             _DF.collect = real_collect
         got = {(r.new_id, r.old_id) for r in pairs.collect()}
+        # no (1,2)/(2,1): within-batch; no (x, newer): probe is vs history
+        assert got == {(3, 1), (3, 2), (4, 1), (4, 2), (4, 3)}
+        # Sink layout: one overwrite dir per epoch (replay idempotence —
+        # a retried batch rewrites exactly its own directory).
+        epochs = sorted(d for d in os.listdir(pairs_dir) if d.startswith("epoch_"))
+        assert epochs == ["epoch_0", "epoch_1", "epoch_2"]
+
+        # A second, shorter run into the same pairs_dir: the first run's
+        # epoch_2 pairs must not leak into its result.
+        stream_dir = _minhash_stream(spark, str(tmp_path / "run2"), _MINHASH_BATCHES[:2])
+        pairs = run_streaming_minhash_index(
+            spark, stream_dir, bands_t, sets_t, threshold=0.3,
+            k_shingle=2, pairs_dir=pairs_dir,
+        )
+        assert {(r.new_id, r.old_id) for r in pairs.collect()} == {(3, 1), (3, 2)}
+        epochs = sorted(d for d in os.listdir(pairs_dir) if d.startswith("epoch_"))
+        assert epochs == ["epoch_0", "epoch_1"]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {bands_t}")
         spark.sql(f"DROP TABLE IF EXISTS {sets_t}")
-    # no (1,2)/(2,1): within-batch; no (x, newer): probe is vs history
-    assert got == {(3, 1), (3, 2), (4, 1), (4, 2), (4, 3)}
-    # Sink layout: one overwrite dir per epoch (replay idempotence —
-    # a retried batch rewrites exactly its own directory).
-    epochs = sorted(d for d in os.listdir(pairs_dir) if d.startswith("epoch_"))
-    assert epochs == ["epoch_0", "epoch_1", "epoch_2"]
+
+
+def test_streaming_minhash_index_releases_caches_on_failure(spark, tmp_path, monkeypatch):
+    """An epoch whose ingest fails still releases the relations it
+    cached (the shingle rows and the band/set relations), and the drain
+    raises instead of returning."""
+    from pyspark.errors import StreamingQueryException
+
+    from parcialbigdata_spark.operators import dedup
+    from parcialbigdata_spark.streaming.dedup_store import (
+        run_streaming_minhash_index,
+    )
+
+    real_ingest = dedup.minhash_index_ingest
+
+    def ingest_fails_on_append(*args, append=False, **kwargs):
+        if append:
+            raise RuntimeError("injected ingest failure")
+        return real_ingest(*args, append=append, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_index_ingest", ingest_fails_on_append)
+    spark.catalog.clearCache()  # start from an empty cache manager
+    stream_dir = _minhash_stream(spark, str(tmp_path), _MINHASH_BATCHES)
+    bands_t, sets_t = "t_stream_fail_bands", "t_stream_fail_sets"
+    try:
+        with pytest.raises(StreamingQueryException, match="injected ingest failure"):
+            run_streaming_minhash_index(
+                spark, stream_dir, bands_t, sets_t, threshold=0.3, k_shingle=2,
+                pairs_dir=str(tmp_path / "pairs"),
+            )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {bands_t}")
+        spark.sql(f"DROP TABLE IF EXISTS {sets_t}")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_streaming_minhash_index_jobs_per_drain_pinned(spark, tmp_path):
+    """The 3-batch drain submits a fixed number of Spark jobs, counted
+    under the streaming query's run id: a different count means an epoch
+    gained or lost an action."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from parcialbigdata_spark.streaming.dedup_store import (
+        run_streaming_minhash_index,
+    )
+
+    run_ids = []
+
+    class RunIds(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    stream_dir = _minhash_stream(spark, str(tmp_path), _MINHASH_BATCHES)
+    bands_t, sets_t = "t_stream_jobs_bands", "t_stream_jobs_sets"
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        run_streaming_minhash_index(
+            spark, stream_dir, bands_t, sets_t, threshold=0.3, k_shingle=2,
+            pairs_dir=str(tmp_path / "pairs"),
+        )
+    finally:
+        spark.streams.removeListener(listener)
+        spark.sql(f"DROP TABLE IF EXISTS {bands_t}")
+        spark.sql(f"DROP TABLE IF EXISTS {sets_t}")
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    (run_id,) = run_ids
+    jobs = len(sc.statusTracker().getJobIdsForGroup(run_id))
+    assert jobs == 29, f"{jobs} jobs per drain"
 
 
 # ----------------------------------------------- r9: property tests

@@ -1,16 +1,21 @@
 """Structured Streaming tests: file-source landing → per-file CSV with
-exactly-once semantics (E1), availableNow drain (E2), empty-input error
-side-channel (E3), and the watermarked-window builders (E4)."""
+exactly-once semantics (E1), availableNow drain and its timeout guard
+(E2), empty-input error side-channel (E3), the index-store scaffold, and
+the watermarked-window builders (E4)."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.errors import StreamingQueryException
 
 from parcialbigdata_spark.pipeline import compat_view, exploded_cards, process_handler, sink
 from parcialbigdata_spark.streaming import run_available_now, stream_landing_to_csv
+from parcialbigdata_spark.streaming.ann_store import run_streaming_ivf_index
+from parcialbigdata_spark.streaming.dedup_store import run_streaming_minhash_index
+from parcialbigdata_spark.streaming.media_store import run_streaming_phash_index
 from tests.test_fetch import RecordingStore
 from tests.test_pipeline import GOLDEN_CARD, MISSING_FIELDS_CARD, _page
 
@@ -23,10 +28,7 @@ def test_stream_landing_to_csv(spark, tmp_path):
     (landing / "2026-08-03.html").write_text("<html><body>vacío</body></html>")
 
     store = RecordingStore(str(tmp_path / "store"))
-    q = stream_landing_to_csv(
-        spark, str(landing), str(tmp_path / "ckpt"), store=store, available_now=True
-    )
-    run_available_now(q)
+    run_available_now(stream_landing_to_csv(spark, str(landing), str(tmp_path / "ckpt"), store=store))
 
     csvs = {c["Key"]: c for c in store.put_calls if c["Bucket"] == "parcials"}
     errors = {c["Key"]: c for c in store.put_calls if c["Bucket"] == "errors"}
@@ -148,6 +150,33 @@ def test_stream_landing_guard_trips_before_write(spark, tmp_path, monkeypatch):
         run_available_now(q)
     assert q.exception() is not None
     assert store.put_calls == []
+
+
+def test_drain_timeout_raises_and_stops_query(spark):
+    """A drain still running at its timeout is stopped and raises: a
+    never-ending rate-source query cannot pass for a finished one."""
+    q = spark.readStream.format("rate").load().writeStream.format("noop").start()
+    try:
+        with pytest.raises(RuntimeError, match="availableNow drain did not finish within 2s"):
+            run_available_now(q, timeout_sec=2)
+        assert not q.isActive
+    finally:
+        q.stop()
+
+
+@pytest.mark.parametrize(
+    "store",
+    [
+        lambda spark, d: run_streaming_minhash_index(spark, d, "t_bands", "t_sets"),
+        lambda spark, d: run_streaming_ivf_index(spark, d, "t_cells", [[1.0, 0.0]]),
+        lambda spark, d: run_streaming_phash_index(spark, d, "t_bands"),
+    ],
+    ids=["minhash", "ivf", "phash"],
+)
+def test_drain_index_store_empty_stream_dir_raises(spark, tmp_path, store):
+    (tmp_path / "notes.txt").write_text("not a micro-batch")
+    with pytest.raises(ValueError, match=re.escape(f"no .parquet file in stream dir '{tmp_path}'")):
+        store(spark, str(tmp_path))
 
 
 THIRD_CARD = """
