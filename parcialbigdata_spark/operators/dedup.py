@@ -450,6 +450,12 @@ def _materialize_sparse(rows: DataFrame) -> DataFrame:
     strategy at EVERY measured size, and size-based switching is
     falsified, not implemented.
 
+    ``canChangeCachedPlanOutputPartitioning=true`` is now the session
+    default (``session.get_spark``): it lets AQE coalesce the final
+    stage of small persisted relations. r11's measurement above still
+    stands — the flag does not close this path's exchange gap — and the
+    checkpoint strategy here is unchanged.
+
     The conf knob stays for the one environment where the checkpoint
     is genuinely wrong: ``localCheckpoint`` blocks are
     non-recomputable, so on a cluster with dynamic allocation /
@@ -1475,21 +1481,23 @@ def minhash_index_ingest(
     from parcialbigdata_spark.sources.warehouse import write_bucketed
 
     mode = "append" if append else "overwrite"
-    write_bucketed(
-        bb, bands_table, "band_hash", num_buckets=num_buckets, mode=mode,
-        sort=False,
-    )
-    if precomputed_sets is not None:
-        sh = precomputed_sets
-    else:
-        sh = rows.groupBy(id_col).agg(
-            F.collect_set(F.xxhash64("__s")).alias("sh")
+    try:
+        write_bucketed(
+            bb, bands_table, "band_hash", num_buckets=num_buckets, mode=mode,
+            sort=False,
         )
-    write_bucketed(
-        sh, sets_table, id_col, num_buckets=num_buckets, mode=mode, sort=False
-    )
-    if own_rows is not None:
-        own_rows.unpersist()
+        if precomputed_sets is not None:
+            sh = precomputed_sets
+        else:
+            sh = rows.groupBy(id_col).agg(
+                F.collect_set(F.xxhash64("__s")).alias("sh")
+            )
+        write_bucketed(
+            sh, sets_table, id_col, num_buckets=num_buckets, mode=mode, sort=False
+        )
+    finally:
+        if own_rows is not None:
+            own_rows.unpersist()
 
 
 def minhash_index_compact(

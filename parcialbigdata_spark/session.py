@@ -7,9 +7,12 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
 - Arrow on (pandas UDFs are the only Python hot path we allow).
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle.
-- ``shuffle.partitions`` defaults to 2×cores locally; on a real cluster
-  AQE coalesces from a deliberately-high initial number, so we set the
-  initial partition number high and let AQE shrink it.
+- ``shuffle.partitions`` defaults to ``max(cores, 16)``; AQE coalesces
+  from that deliberately-high initial number, on a real cluster as
+  locally, so we set the initial partition number high and let AQE
+  shrink it. Persisted plans coalesce their final stage too
+  (``canChangeCachedPlanOutputPartitioning``), so a small cached
+  relation does not carry the initial number into every reader.
 """
 
 from __future__ import annotations
@@ -64,8 +67,16 @@ def get_spark(app_name: str = "parcialbigdata-spark", master: str | None = None)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Locally: 1 shuffle partition per core — AQE coalesces further
-        # down for small shuffles, and measured bench time rises
+        # Persisted plans get AQE's final-stage coalescing as well. Under
+        # Spark's default (false) a cached relation's last exchange keeps
+        # the full shuffle.partitions count, and every stage reading a
+        # small cache runs that many near-empty tasks. Safe for the caches
+        # whose consumers rely on their partitioning: repartition(n, ...)
+        # and repartitionByRange(n, ...) are REPARTITION_BY_NUM shuffles,
+        # which AQE never coalesces.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # Initial shuffle partitions: max(cores, 16), which AQE coalesces
+        # down for small shuffles. Measured bench time rises
         # monotonically with extra partitions (pure task-scheduling
         # overhead at single-node scale: 64 partitions costs ~10% more
         # wall clock than 32 at sf0.1). On a 1000-executor cluster set

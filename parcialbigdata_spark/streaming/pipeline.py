@@ -184,7 +184,10 @@ def drain_index_store(
         try:
             out, ingest = step(batch_df, epoch_id == 0, cache)
             if out is None:  # an empty dir still carries files + schema
-                out = batch_df.sparkSession.createDataFrame([], schema)
+                # An empty RDD has no partitions, so the write is one task
+                # (a list-built frame has one per core, all empty).
+                session = batch_df.sparkSession
+                out = session.createDataFrame(session.sparkContext.emptyRDD(), schema)
             out.write.mode("overwrite").parquet(os.path.join(out_dir, f"epoch_{epoch_id}"))
             ingest()
         finally:

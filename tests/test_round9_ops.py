@@ -291,6 +291,26 @@ def test_minhash_index_shared_batch_relations_equivalent(spark, _idx_tables):
         )
 
 
+def test_minhash_index_ingest_releases_own_rows_on_failure(spark, _idx_tables, monkeypatch):
+    """An ingest whose bucketed write fails still releases the shingle
+    relation it persisted itself, and the failure propagates."""
+    from parcialbigdata_spark.operators import dedup
+    from parcialbigdata_spark.sources import warehouse
+
+    def write_fails(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(warehouse, "write_bucketed", write_fails)
+    spark.catalog.clearCache()  # start from an empty cache manager
+    bands_t, sets_t = _idx_tables
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        dedup.minhash_index_ingest(
+            _docs(spark, [(1, BASE_TEXT)]), "doc_id", "text", bands_t, sets_t,
+            k_shingle=2,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ------------------------------------------- streaming late-data audit
 
 
@@ -789,8 +809,18 @@ def test_streaming_minhash_index_jobs_per_drain_pinned(spark, tmp_path):
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     (run_id,) = run_ids
-    jobs = len(sc.statusTracker().getJobIdsForGroup(run_id))
-    assert jobs == 29, f"{jobs} jobs per drain"
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(run_id)
+    assert len(job_ids) == 29, f"{len(job_ids)} jobs per drain"
+    # The widest legitimate stage is the bucketed scan of the stored
+    # index (num_buckets = 8); no stage may fan out to the initial
+    # shuffle.partitions count or to one task per core.
+    tasks = {
+        s: tracker.getStageInfo(s).numTasks
+        for j in job_ids
+        for s in tracker.getJobInfo(j).stageIds
+    }
+    assert max(tasks.values()) <= 8, f"tasks per stage: {tasks}"
 
 
 # ----------------------------------------------- r9: property tests
