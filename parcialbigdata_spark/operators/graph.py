@@ -6,6 +6,9 @@ extension).
   ``(id_a, id_b)``) into CLUSTERS, so that one survivor is kept per
   component, not per pair; :func:`dedup_clusters` summarizes them and
   :func:`incremental_components` folds new pairs into prior labels.
+  A pair graph of at most :data:`CC_DRIVER_MAX_EDGES` symmetrized
+  edges finishes on the driver in one collect instead of running
+  label rounds: at near-dup batch sizes the rounds cost jobs, not data.
 - Ranking: :func:`pagerank_scaled`, and the mass-conserving
   :func:`pagerank_conserving` / :func:`pagerank_personalized`, all in
   exact bigint arithmetic so a SQL oracle replays them bit for bit.
@@ -37,12 +40,21 @@ loops are unchanged.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections import defaultdict
+from collections.abc import Callable, Iterable
+
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from parcialbigdata_spark.session import release_checkpoint
+
+#: Largest symmetrized edge count the label path of
+#: :func:`connected_components` finishes on the driver (how it was
+#: chosen: that docstring). Read per call, so tests can monkeypatch it.
+CC_DRIVER_MAX_EDGES = 100_000
 
 
 class _RoundState:
@@ -103,6 +115,8 @@ def connected_components(
     ``pairs`` is undirected input (each row links two nodes). Raises
     ``RuntimeError`` if the labels have not converged after
     ``max_iter`` rounds (diameter > max_iter — not a near-dup graph).
+    For the label path that is exactly when some node lies more than
+    ``2·max_iter − 1`` hops from its component minimum.
 
     ``algorithm="label"`` (default) is min-label propagation: every
     node starts labeled with its own id and each hop takes the min
@@ -126,23 +140,86 @@ def connected_components(
     caller's pairs are already pair-grained (every near-dup pair
     producer here emits groupBy/distinct output). Keep the default for
     arbitrary input: heavy edge multiplicity would multiply the
-    per-round join fan-out."""
+    per-round join fan-out.
+
+    Small-input finish (label path). The symmetrized edges are
+    checkpointed before the first round, and that checkpoint also
+    observes their row count and null endpoints, at no extra job. If
+    the count is at most :data:`CC_DRIVER_MAX_EDGES` (read per call),
+    no endpoint is null and the node type is integral or a
+    binary-collated string (types whose Python order is Spark's), the
+    edges come to the driver in one Arrow collect, a breadth-first
+    search labels each component, the checkpoint is released and the
+    labels return as a local relation with the same ``(node,
+    component)`` columns and node type. Otherwise the rounds below run.
+
+    - Exact: the rounds converge to the minimum id reachable from each
+      node, and the searches start from roots in ascending id order,
+      so each starts at the minimum of its component and labels
+      exactly the nodes reachable from it.
+    - Same non-convergence rule: round ``i`` certifies the fixpoint
+      exactly when every node is within ``2i+1`` hops of its component
+      minimum (the rounds' labels after ``h`` hops are the minimum
+      within ``h`` hops), so the finish raises the same
+      ``RuntimeError`` exactly when its deepest search exceeds
+      ``2·max_iter − 1`` hops.
+    - The bound comes from timing both paths on chains of five nodes,
+      the near-dup shape (two rounds), at ``local[2]`` on a 4-core
+      host, call plus one downstream aggregate, median of 5 warm runs:
+      10^3 edges 0.57 s on the driver vs 1.47 s in rounds, 10^4 0.33
+      vs 1.27 s, 10^5 0.79 vs 1.99 s, 3·10^5 1.71 vs 3.18 s. No
+      crossover shows in that range, but the finish is single-threaded
+      Python whose time and memory (18 MB at 10^5 edges, 59 MB at
+      3·10^5) grow with the graph while only the rounds gain from more
+      cores, so the bound stops at 10^5, where the finish still takes
+      under half the rounds' time."""
     if algorithm == "star":
         return _connected_components_star(pairs, src, dst, max_iter)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
     # Symmetrize once; the checkpoint cuts the upstream pair plan out of
-    # every round's lineage. The checkpointed relation is hash-
-    # partitioned on the probe-side key ``v`` FIRST (LogicalRDD
-    # retains the physical partitioning), so at scale each round's
-    # edges⋈labels join reshuffles only the label side; at fixture
-    # scale AQE broadcasts the labels anyway.
+    # every round's lineage. It is not repartitioned on ``v``: the
+    # LogicalRDD of an adaptive plan reports no partitioning, so the
+    # rounds' joins would reshuffle the edges anyway.
     fwd = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
     if not assume_distinct:
         sym = sym.distinct()
     with _RoundState() as rs:
-        edges = rs.checkpoint(sym.repartition(F.col("v")))
+        # The checkpoint also observes the edge count and the null
+        # endpoints (symmetrized: a null endpoint shows up as a null u),
+        # which decide the driver finish at no extra job.
+        size = Observation("cc_edges")
+        edges = rs.checkpoint(
+            sym.observe(
+                size,
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col("u").isNull()).alias("n_null"),
+            )
+        )
+        node = edges.schema["u"]
+        seen = size.get
+        if (
+            seen["n"] <= CC_DRIVER_MAX_EDGES
+            and seen["n_null"] == 0
+            and (isinstance(node.dataType, IntegralType) or node.dataType == StringType())
+        ):
+            # The loop below certifies its fixpoint in round i exactly
+            # when every node is within 2i+1 hops of its component
+            # minimum, so it gives up past depth 2·max_iter−1.
+            table = edges.toArrow()
+            component, depth = _min_reachable(
+                zip(table.column("u").to_pylist(), table.column("v").to_pylist())
+            )
+            if depth > 2 * max_iter - 1:
+                raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+            schema = StructType(
+                [StructField(c, node.dataType, node.nullable) for c in ("node", "component")]
+            )
+            return edges.sparkSession.createDataFrame(
+                pa.table({"node": list(component), "component": list(component.values())}),
+                schema,
+            )
         # Round 0's first hop is specialized: with identity labels the
         # closed-neighborhood min is just least(u, min(v)) grouped by u
         # — one hash agg over the checkpointed edges instead of a
@@ -158,11 +235,18 @@ def connected_components(
             # neighbors'. The input label rides along as ``__prev`` so
             # a round can observe both (the optimizer prunes it when
             # another hop consumes this one).
+            #
+            # Both joins are hinted shuffle-hash. Unhinted, AQE turns
+            # them into broadcasts whose build side is whichever shuffle
+            # stage finishes first, so the job count would vary from run
+            # to run. The build sides hold one row per node, so no
+            # build partition can skew.
             neighbor_min = (
-                edges.join(lab, edges.v == lab.node)
+                edges.join(lab.hint("shuffle_hash"), edges.v == lab.node)
                 .groupBy("u")
                 .agg(F.min("comp").alias("n_comp"))
             )
+            neighbor_min = neighbor_min.hint("shuffle_hash")
             return lab.join(neighbor_min, lab.node == neighbor_min.u, "left").select(
                 "node",
                 F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias("comp"),
@@ -206,6 +290,36 @@ def connected_components(
             if got["s_comp"] == got["s_prev"]:
                 return rs.keep(labels).select(F.col("node"), F.col("comp").alias("component"))
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
+def _min_reachable(edges: Iterable[tuple]) -> tuple[dict, int]:
+    """Driver finish of :func:`connected_components`: ``({node:
+    component}, depth)`` over symmetrized ``(u, v)`` edges, where
+    ``depth`` is the largest BFS distance from a component minimum.
+    Roots are taken in ascending id order, so each BFS starts at the
+    minimum of a component not yet reached."""
+    adj = defaultdict(list)
+    for u, v in edges:
+        adj[u].append(v)
+    component: dict = {}
+    depth = 0
+    for root in sorted(adj):
+        if root in component:
+            continue
+        component[root] = root
+        level, hops = [root], 0
+        while True:
+            nxt = []
+            for x in level:
+                for y in adj[x]:
+                    if y not in component:
+                        component[y] = root
+                        nxt.append(y)
+            if not nxt:
+                break
+            level, hops = nxt, hops + 1
+        depth = max(depth, hops)
+    return component, depth
 
 
 def _large_star(E: DataFrame) -> DataFrame:
@@ -770,19 +884,23 @@ def shortest_paths(
         settled = frontier = rs.checkpoint(
             edges.sparkSession.createDataFrame([(source, 0)], "node BIGINT, dist INT")
         )
-        for _ in range(max_iter):
+        for i in range(max_iter):
             cand = (
                 frontier.join(e, frontier.node == e.src)
                 .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
                 .groupBy("node")
                 .agg(F.min("dist").alias("dist"))
             )
-            new = cand.join(settled, "node", "left_anti")
-            grown = rs.checkpoint(settled.unionAll(new))
-            frontier = rs.checkpoint(new, settled, frontier)
-            settled = grown
-            if frontier.count() == 0:
+            # One action per round: the new frontier is materialized
+            # once, its size rides that checkpoint, and the settled set
+            # grows from the checkpoint instead of recomputing it.
+            obs = Observation(f"sssp_round_{i}")
+            new = rs.checkpoint(
+                cand.join(settled, "node", "left_anti").observe(obs, F.count(F.lit(1)).alias("n"))
+            )
+            if obs.get["n"] == 0:
                 return rs.keep(settled)
+            settled, frontier = rs.checkpoint(settled.unionAll(new), settled, frontier), new
     raise RuntimeError(f"shortest_paths did not converge in {max_iter} rounds")
 
 
@@ -816,20 +934,24 @@ def kcore(
     )
     e = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     with _RoundState() as rs:
-        e = rs.checkpoint(e)
-        n_prev = e.count()
-        for _ in range(max_iter):
+        # One action per round: each checkpoint observes its own row
+        # count, which is the next round's n_prev (the checkpoint pins
+        # the relation, so it can't drift).
+        obs = Observation("kcore_edges")
+        e = rs.checkpoint(e.observe(obs, F.count(F.lit(1)).alias("n")))
+        n_prev = obs.get["n"]
+        for i in range(max_iter):
             deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
             keep = deg.filter(F.col("deg") >= k).select("a")
+            obs = Observation(f"kcore_round_{i}")
             e = rs.checkpoint(
                 e.join(keep, "a", "left_semi")
                 .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
-                .select("a", "b"),
+                .select("a", "b")
+                .observe(obs, F.count(F.lit(1)).alias("n")),
                 e,
             )
-            # One action per round: this round's count is next round's
-            # n_prev (the checkpoint pins the relation, so it can't drift).
-            n_now = e.count()
+            n_now = obs.get["n"]
             if n_now == n_prev:
                 return (
                     rs.keep(e).groupBy("a")

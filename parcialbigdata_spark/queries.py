@@ -5202,11 +5202,13 @@ _CLUSTERS_ORACLE = f"""
 @query("dedup_clusters_documents", _CLUSTERS_ORACLE)
 def dedup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS (§2.10): transitive closure of the 2-gram
-    Jaccard ≥ 0.05 pair graph (blocked by lang|source) via iterative
-    min-label propagation — pairs tell you who matches whom, clusters
-    tell you what to keep. Oracle: DuckDB recursive CTE computing the
-    same min-reachable-id labeling. (See operators/graph.py for the
-    scale analysis of the propagation loop.)"""
+    Jaccard ≥ 0.05 pair graph (blocked by lang|source) via
+    connected_components: a pair graph this small finishes on the
+    driver in one collect, a larger one runs iterative min-label
+    propagation — pairs tell you who matches whom, clusters tell you
+    what to keep. Oracle: DuckDB recursive CTE computing the same
+    min-reachable-id labeling. (See operators/graph.py for the bound
+    and the scale analysis of the propagation loop.)"""
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "block", F.concat_ws("|", "lang", "source")
     )

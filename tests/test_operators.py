@@ -327,6 +327,15 @@ def test_connected_components_nonconvergence_raises(spark, algorithm):
     assert _n_persisted(spark) <= before, "round state leaked on failure"
 
 
+def test_connected_components_nonconvergence_raises_spark_path(spark, monkeypatch):
+    """The same check with the driver finish disabled, so the label
+    rounds' release on failure stays covered."""
+    from parcialbigdata_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", 0)
+    test_connected_components_nonconvergence_raises(spark, "label")
+
+
 def test_shortest_paths_nonconvergence_raises(spark):
     """SSSP capped below the diameter raises and releases its round
     state, like the CC loops above."""

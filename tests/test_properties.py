@@ -9,6 +9,8 @@ test so a hypothesis run doesn't spawn hundreds of jobs.
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -591,6 +593,76 @@ def test_connected_components_release_superseded_checkpoints(spark):
     assert n_cached() <= base_star + 2  # final E + nodes per call
 
 
+def test_connected_components_release_superseded_checkpoints_spark_path(spark, monkeypatch):
+    """The same release checks with the driver finish disabled, so the
+    label rounds stay covered."""
+    from parcialbigdata_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", 0)
+    test_connected_components_release_superseded_checkpoints(spark)
+
+
+@given(
+    pieces=st.lists(
+        st.tuples(st.sampled_from(["chain", "clique", "loops"]), st.integers(1, 12)),
+        max_size=5,
+    ),
+    bridges=st.lists(st.tuples(st.integers(0, 59), st.integers(0, 59)), max_size=3),
+    n_repeat=st.integers(0, 4),
+    ids=st.sampled_from(["small", "near_2^62", "string"]),
+    rnd=st.randoms(use_true_random=False),
+    max_iter=st.integers(1, 6),
+)
+@settings(max_examples=12, deadline=None)
+def test_connected_components_driver_finish_equals_spark_path(
+    spark, pieces, bridges, n_repeat, ids, rnd, max_iter
+):
+    """On graphs of chains, cliques and self-loops, joined by random
+    bridges and carrying duplicate and reversed pairs, the driver finish
+    returns the label rounds' rows (the bound forced to 0) and raises
+    exactly when they do. It leaves no persisted RDD either way."""
+    from parcialbigdata_spark.operators import graph
+
+    edges, n = [], 0
+    for kind, size in pieces:
+        nodes = range(n, n + size)
+        n += size
+        if kind == "chain":
+            edges += zip(nodes, nodes[1:])
+        elif kind == "clique":
+            edges += [(a, b) for a in nodes for b in nodes if a < b]
+        else:
+            edges += [(a, a) for a in nodes]
+    edges += [(a % n, b % n) for a, b in bridges if n]
+    edges += [(b, a) for a, b in edges[:n_repeat]] + edges[:n_repeat]
+    # Relabel in random order so a component's minimum can sit anywhere
+    # on a chain; string ids compare as text ("10" < "9").
+    perm = rnd.sample(range(n), n)
+    relabel = {
+        "small": lambda i: perm[i],
+        "near_2^62": lambda i: 2**62 - 30 + perm[i],
+        "string": lambda i: str(perm[i]),
+    }[ids]
+    node_type = "STRING" if ids == "string" else "BIGINT"
+    df = spark.createDataFrame(
+        [(relabel(a), relabel(b)) for a, b in edges], f"id_a {node_type}, id_b {node_type}"
+    )
+
+    def run():
+        try:
+            return sorted(graph.connected_components(df, max_iter=max_iter).collect())
+        except RuntimeError as err:
+            assert "did not converge" in str(err)
+            return "raised"
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    on_driver = run()
+    assert jsc.getPersistentRDDs().size() == before, "driver finish left an RDD persisted"
+    with mock.patch.object(graph, "CC_DRIVER_MAX_EDGES", 0):
+        assert run() == on_driver
+
+
 def test_kcore_and_lpa_release_superseded_checkpoints(spark):
     """k-core and label propagation release per-round checkpoints as
     they are superseded: repeated runs grow the persisted-RDD set by at
@@ -631,8 +703,15 @@ def _graph_job_cases(spark):
     tail = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src BIGINT, dst BIGINT"
     )
+    def spark_path(call):
+        with mock.patch.object(graph, "CC_DRIVER_MAX_EDGES", 0):
+            return call()
+
     return {
         "connected_components_label": lambda: graph.connected_components(pairs),
+        "connected_components_label_spark": lambda: spark_path(
+            lambda: graph.connected_components(pairs)
+        ),
         "connected_components_star": lambda: graph.connected_components(
             pairs, algorithm="star"
         ),
@@ -653,13 +732,18 @@ def _graph_job_cases(spark):
 #: aggregate over the cached node relation; AQE coalesces that small cache
 #: to one partition, which already satisfies the aggregate's distribution,
 #: so the read plans no exchange and runs as one job.
+#: connected_components_label finishes on the driver: its edge checkpoint
+#: (the dedup shuffle, then the materialization) and one collect.
+#: ``_spark`` forces the label rounds, whose hinted joins keep the count
+#: the same at every core count.
 _GRAPH_JOBS_PER_CALL = {
-    "connected_components_label": 19,
+    "connected_components_label": 3,
+    "connected_components_label_spark": 13,
     "connected_components_star": 58,
     "pagerank_conserving": 19,
     "pagerank_personalized": 18,
-    "shortest_paths": 83,
-    "kcore": 26,
+    "shortest_paths": 42,
+    "kcore": 18,
     "label_propagation": 23,
 }
 
