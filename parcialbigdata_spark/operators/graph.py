@@ -166,8 +166,8 @@ def connected_components(
     - The bound comes from timing both paths on chains of five nodes,
       the near-dup shape (two rounds), at ``local[2]`` on a 4-core
       host, call plus one downstream aggregate, median of 5 warm runs:
-      10^3 edges 0.57 s on the driver vs 1.47 s in rounds, 10^4 0.33
-      vs 1.27 s, 10^5 0.79 vs 1.99 s, 3·10^5 1.71 vs 3.18 s. No
+      10^3 edges 0.92 s on the driver vs 2.16 s in rounds, 10^4 0.46
+      vs 1.80 s, 10^5 1.08 vs 2.60 s, 3·10^5 2.23 vs 4.34 s. No
       crossover shows in that range, but the finish is single-threaded
       Python whose time and memory (18 MB at 10^5 edges, 59 MB at
       3·10^5) grow with the graph while only the rounds gain from more
@@ -178,9 +178,11 @@ def connected_components(
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
     # Symmetrize once; the checkpoint cuts the upstream pair plan out of
-    # every round's lineage. It is not repartitioned on ``v``: the
-    # LogicalRDD of an adaptive plan reports no partitioning, so the
-    # rounds' joins would reshuffle the edges anyway.
+    # every round's lineage. The checkpointed relation is hash-
+    # partitioned on the probe-side key ``v`` FIRST (LogicalRDD
+    # retains the physical partitioning), so at scale each round's
+    # edges⋈labels join reshuffles only the label side; at fixture
+    # scale AQE broadcasts the labels anyway.
     fwd = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
     if not assume_distinct:
@@ -191,7 +193,7 @@ def connected_components(
         # which decide the driver finish at no extra job.
         size = Observation("cc_edges")
         edges = rs.checkpoint(
-            sym.observe(
+            sym.repartition(F.col("v")).observe(
                 size,
                 F.count(F.lit(1)).alias("n"),
                 F.count_if(F.col("u").isNull()).alias("n_null"),
@@ -235,18 +237,11 @@ def connected_components(
             # neighbors'. The input label rides along as ``__prev`` so
             # a round can observe both (the optimizer prunes it when
             # another hop consumes this one).
-            #
-            # Both joins are hinted shuffle-hash. Unhinted, AQE turns
-            # them into broadcasts whose build side is whichever shuffle
-            # stage finishes first, so the job count would vary from run
-            # to run. The build sides hold one row per node, so no
-            # build partition can skew.
             neighbor_min = (
-                edges.join(lab.hint("shuffle_hash"), edges.v == lab.node)
+                edges.join(lab, edges.v == lab.node)
                 .groupBy("u")
                 .agg(F.min("comp").alias("n_comp"))
             )
-            neighbor_min = neighbor_min.hint("shuffle_hash")
             return lab.join(neighbor_min, lab.node == neighbor_min.u, "left").select(
                 "node",
                 F.least(F.col("comp"), F.coalesce(F.col("n_comp"), F.col("comp"))).alias("comp"),

@@ -704,8 +704,17 @@ def _graph_job_cases(spark):
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], "src BIGINT, dst BIGINT"
     )
     def spark_path(call):
-        with mock.patch.object(graph, "CC_DRIVER_MAX_EDGES", 0):
-            return call()
+        # Broadcasts off: AQE would otherwise broadcast whichever side of
+        # a round's join finishes its shuffle first, and the job count
+        # would vary from run to run.
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        threshold = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            with mock.patch.object(graph, "CC_DRIVER_MAX_EDGES", 0):
+                return call()
+        finally:
+            spark.conf.set(key, threshold)
 
     return {
         "connected_components_label": lambda: graph.connected_components(pairs),
@@ -733,12 +742,13 @@ def _graph_job_cases(spark):
 #: to one partition, which already satisfies the aggregate's distribution,
 #: so the read plans no exchange and runs as one job.
 #: connected_components_label finishes on the driver: its edge checkpoint
-#: (the dedup shuffle, then the materialization) and one collect.
-#: ``_spark`` forces the label rounds, whose hinted joins keep the count
-#: the same at every core count.
+#: (the dedup and repartition shuffles, then the materialization) and
+#: one collect.
+#: ``_spark`` forces the label rounds, with broadcast joins off so the
+#: count does not depend on which shuffle finishes first.
 _GRAPH_JOBS_PER_CALL = {
-    "connected_components_label": 3,
-    "connected_components_label_spark": 13,
+    "connected_components_label": 4,
+    "connected_components_label_spark": 14,
     "connected_components_star": 58,
     "pagerank_conserving": 19,
     "pagerank_personalized": 18,

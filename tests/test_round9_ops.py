@@ -814,14 +814,11 @@ def test_streaming_minhash_index_jobs_per_drain_pinned(spark, tmp_path):
     assert len(job_ids) == 29, f"{len(job_ids)} jobs per drain"
     # The widest legitimate stage is the bucketed scan of the stored
     # index (num_buckets = 8); no stage may fan out to the initial
-    # shuffle.partitions count or to one task per core. Past
-    # spark.ui.retainedStages the status store evicts skipped stages
-    # first, so a stage without info here ran no tasks.
+    # shuffle.partitions count or to one task per core.
     tasks = {
-        s: info.numTasks
+        s: tracker.getStageInfo(s).numTasks
         for j in job_ids
         for s in tracker.getJobInfo(j).stageIds
-        if (info := tracker.getStageInfo(s)) is not None
     }
     assert max(tasks.values()) <= 8, f"tasks per stage: {tasks}"
 
