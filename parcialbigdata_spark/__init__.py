@@ -15,11 +15,14 @@ re-expressed Spark-first:
 - ``functions``  — scalar/text/vector expression builders (pure
                    pyspark.sql.functions — JVM-side, codegen-friendly).
 - ``sources``    — table loaders and the multimodal binary-column plumbing.
+- ``pyworker``   — imported for its effect: Python workers stop re-reading
+                   ``pyspark.zip`` at every task start (Python < 3.13).
 
 Everything is built on the public Apache Spark DataFrame/SQL API; Catalyst
 and AQE do all plan optimization (SURVEY.md §4: no custom rules needed).
 """
 
+from parcialbigdata_spark import pyworker  # noqa: F401  (installs itself)
 from parcialbigdata_spark.session import get_spark
 
 __all__ = ["get_spark"]

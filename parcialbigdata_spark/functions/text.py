@@ -92,10 +92,6 @@ def stopword_ratio_from_tokens(toks: Column, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    return stopword_ratio_from_tokens(tokens(F.lower(_c(text))), lang)
-
-
 def mean_word_len_from_tokens(toks: Column) -> Column:
     total = F.aggregate(
         F.transform(toks, lambda t: F.length(t).cast("double")),
@@ -103,10 +99,6 @@ def mean_word_len_from_tokens(toks: Column) -> Column:
         lambda a, x: a + x,
     )
     return total / F.greatest(F.size(toks), F.lit(1))
-
-
-def mean_word_len(text: Column | str) -> Column:
-    return mean_word_len_from_tokens(tokens(_c(text)))
 
 
 def quality_score_from_tokens(text: Column | str, toks: Column) -> Column:

@@ -110,22 +110,6 @@ def cosine_topk(
     return scored.orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc()).limit(k)
 
 
-def hyperplane_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
-    """Pack sign(v·h_i) bits into an int bucket id. Pure SQL fold."""
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        bit = F.when(V.dot(vec, _lit_vec(plane)) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
-
-
-def add_lsh_bucket(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64, nbits: int = DEFAULT_NBITS
-) -> DataFrame:
-    return df.withColumn("lsh_bucket", hyperplane_bucket(vec_col, _planes(dim, nbits)))
-
-
 def ann_topk(
     df: DataFrame,
     query_vec: list[float],

@@ -4,8 +4,16 @@ Spark shape (SURVEY.md §3.3): whole-file text scan → Arrow-batched
 pandas UDF returning ``array<struct>`` of card fields → ``explode`` →
 typed projection. Narrow transforms only — this pipeline needs ZERO
 shuffles at any scale, its CSV sinks included (batch, per-event and
-streaming); throughput scales linearly with executors and the only
-Python cost is the parse UDF, amortized per whole file.
+streaming); throughput scales linearly with executors.
+
+The Python cost is the parse UDF, amortized per whole file, plus a fixed
+cost per Python task. That fixed cost used to dominate: on a 4-core host
+each task spent about 0.2 s of worker CPU before it read a row, in
+PySpark's ``setup_spark_files`` re-reading ``pyspark.zip`` 16 times
+(Python < 3.13), so a ``listings_etl`` pass's traced UDF time was 1.5–1.9 s
+for a parse that takes 0.1 s over the whole corpus in one process. The package's
+``pyworker`` module removes it on every reused worker (0.03–0.10 s per
+task); only a worker's first task still pays.
 
 Three layers:
 
