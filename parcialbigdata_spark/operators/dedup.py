@@ -66,6 +66,20 @@ def canonical_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # inside every lambda. The explode/agg shape below keeps every operator
 # inside codegen; the groupBy is map-side partial-aggregated, so the
 # shuffle carries one num_hashes-wide row per (doc × partition).
+#
+# Plan-building cost: every PySpark Column call is at least 3 py4j round
+# trips, and on PySpark 4 ``F.col`` or a Column method costs about 11
+# more, because ``_with_origin`` captures the Python call site. Built with
+# the Column API, the 32-hash signature aggregate took about 1,300 round
+# trips (160 ms) per call, a fixed driver cost that rivals its Spark jobs
+# at the streaming store's batch size. Expressions that grow with
+# ``num_hashes``/``bands`` (the signature folds, the band structs) and
+# the set and bucket-cap expressions are therefore written as SQL text
+# (``F.expr``/``selectExpr``), which Spark parses into the same plan:
+# ``minhash_batch_relations`` fell from about 2,200 to 180 round trips
+# and from 255 to 61 ms per call (4-core host, warm session). A
+# caller-supplied column name is quoted by :func:`_sql_name`. Plumbing
+# of a fixed width (renames, join keys) stays in the Column API.
 
 
 def shingle_rows(
@@ -120,11 +134,16 @@ def minhash_signatures(
     return _signatures_from_rows(shingle_rows(df, id_col, text_col, k_shingle), id_col, num_hashes)
 
 
+def _sql_name(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _signatures_from_rows(rows: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
     """(id, __s) shingle rows → (id, m0..m{n-1}) signature columns."""
-    hashed = rows.select(F.col(id_col), F.xxhash64("__s").alias("__h"))
+    hashed = rows.selectExpr(_sql_name(id_col), "xxhash64(__s) AS __h")
     return hashed.groupBy(id_col).agg(
-        *[F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"m{i}") for i in range(num_hashes)]
+        *[F.expr(f"min(xxhash64({i}, __h)) AS m{i}") for i in range(num_hashes)]
     )
 
 
@@ -135,17 +154,14 @@ def _banded_rows(
     is ``xxhash64(m_{b·r}, …, m_{b·r+r-1})`` — variadic column
     hashing, no array construction."""
     r = num_hashes // bands
-    banded = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(*[F.col(f"m{b * r + j}") for j in range(r)]).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
+    structs = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_hash',"
+        f" xxhash64({', '.join(f'm{b * r + j}' for j in range(r))}))"
+        for b in range(bands)
     )
-    return sigs.select(F.col(id_col), F.explode(banded).alias("band")).select(
-        id_col, "band.band_idx", "band.band_hash"
+    qid = _sql_name(id_col)
+    return sigs.selectExpr(qid, f"explode(array({structs})) AS band").selectExpr(
+        qid, "band.band_idx", "band.band_hash"
     )
 
 
@@ -158,10 +174,14 @@ def _cap_buckets(bb: DataFrame, max_bucket: int) -> DataFrame:
     semantic, one place to change it)."""
     if not max_bucket:
         return bb
-    from pyspark.sql import Window
+    bucket_n = F.expr("count(1) OVER (PARTITION BY band_idx, band_hash)")
+    return bb.withColumn("__n", bucket_n).filter(f"__n <= {int(max_bucket)}").drop("__n")
 
-    bucket_n = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_hash"))
-    return bb.withColumn("__n", bucket_n).filter(F.col("__n") <= max_bucket).drop("__n")
+
+def _hashed_sets(rows: DataFrame, id_col: str) -> DataFrame:
+    """(id, __s) shingle rows → (id, sh): each document's distinct
+    ``xxhash64`` shingle hashes, the exact-Jaccard verify side."""
+    return rows.groupBy(id_col).agg(F.expr("collect_set(xxhash64(__s)) AS sh"))
 
 
 def _candidate_pairs_from_sigs(
@@ -241,11 +261,7 @@ def minhash_near_dups(
     rows = shingle_rows(df, id_col, text_col, k_shingle).persist()
     sigs = _signatures_from_rows(rows, id_col, num_hashes)
     cands = _candidate_pairs_from_sigs(sigs, id_col, num_hashes, bands, max_bucket=10_000)
-    sh = (
-        rows.groupBy(id_col)
-        .agg(F.collect_set(F.xxhash64("__s")).alias("sh"))
-        .persist()
-    )
+    sh = _hashed_sets(rows, id_col).persist()
     out = (
         cands.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
@@ -317,7 +333,7 @@ def minhash_near_dups_bucketed(
 
     write_bucketed(bb, table, "band_hash", num_buckets=num_buckets)
     cands = bucketed_band_self_join(spark, table, id_col).distinct()
-    sh = rows.groupBy(id_col).agg(F.collect_set(F.xxhash64("__s")).alias("sh")).persist()
+    sh = _hashed_sets(rows, id_col).persist()
     return (
         cands.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
@@ -1363,9 +1379,27 @@ def minhash_batch_relations(
     raw band rows while ingest applies its per-batch ``max_bucket``
     cap itself — one relation serves both."""
     sigs = _signatures_from_rows(rows, id_col, num_hashes)
-    bb = _banded_rows(sigs, id_col, num_hashes, bands)
-    sh = rows.groupBy(id_col).agg(F.collect_set(F.xxhash64("__s")).alias("sh"))
-    return bb, sh
+    return _banded_rows(sigs, id_col, num_hashes, bands), _hashed_sets(rows, id_col)
+
+
+def _batch_relations_or_shared(
+    rows: DataFrame | None,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    precomputed_bands: DataFrame | None,
+    precomputed_sets: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The batch's (bands, sets): the caller's shared relations where
+    given, the rest derived from ``rows`` by
+    :func:`minhash_batch_relations`."""
+    if precomputed_bands is not None and precomputed_sets is not None:
+        return precomputed_bands, precomputed_sets
+    bb, sh = minhash_batch_relations(rows, id_col, num_hashes, bands)
+    return (
+        bb if precomputed_bands is None else precomputed_bands,
+        sh if precomputed_sets is None else precomputed_sets,
+    )
 
 
 def _check_batch_relations(
@@ -1471,27 +1505,17 @@ def minhash_index_ingest(
         if rows is None:
             own_rows = shingle_rows(df, id_col, text_col, k_shingle).persist()
             rows = own_rows
-    if precomputed_bands is not None:
-        bb = _cap_buckets(precomputed_bands, max_bucket)
-    else:
-        sigs = _signatures_from_rows(rows, id_col, num_hashes)
-        bb = _cap_buckets(
-            _banded_rows(sigs, id_col, num_hashes, bands), max_bucket
-        )
     from parcialbigdata_spark.sources.warehouse import write_bucketed
 
     mode = "append" if append else "overwrite"
     try:
-        write_bucketed(
-            bb, bands_table, "band_hash", num_buckets=num_buckets, mode=mode,
-            sort=False,
+        bb, sh = _batch_relations_or_shared(
+            rows, id_col, num_hashes, bands, precomputed_bands, precomputed_sets
         )
-        if precomputed_sets is not None:
-            sh = precomputed_sets
-        else:
-            sh = rows.groupBy(id_col).agg(
-                F.collect_set(F.xxhash64("__s")).alias("sh")
-            )
+        write_bucketed(
+            _cap_buckets(bb, max_bucket), bands_table, "band_hash",
+            num_buckets=num_buckets, mode=mode, sort=False,
+        )
         write_bucketed(
             sh, sets_table, id_col, num_buckets=num_buckets, mode=mode, sort=False
         )
@@ -1634,11 +1658,9 @@ def minhash_index_probe(
     _check_batch_relations(
         "minhash_index_probe", id_col, precomputed_bands, precomputed_sets
     )
-    if precomputed_bands is not None:
-        batch_bands = precomputed_bands
-    else:
-        sigs = _signatures_from_rows(rows, id_col, num_hashes)
-        batch_bands = _banded_rows(sigs, id_col, num_hashes, bands)
+    batch_bands, sh_new = _batch_relations_or_shared(
+        rows, id_col, num_hashes, bands, precomputed_bands, precomputed_sets
+    )
     probe_bands = batch_bands.withColumnRenamed(id_col, "new_id")
     stored = spark.table(bands_table).withColumnRenamed(id_col, "old_id")
     cands = (
@@ -1647,12 +1669,6 @@ def minhash_index_probe(
         .select("new_id", "old_id")
         .distinct()
     )
-    if precomputed_sets is not None:
-        sh_new = precomputed_sets
-    else:
-        sh_new = rows.groupBy(id_col).agg(
-            F.collect_set(F.xxhash64("__s")).alias("sh")
-        )
     sh_old = spark.table(sets_table)
     return (
         cands.join(

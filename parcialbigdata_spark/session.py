@@ -13,6 +13,13 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
   shrink it. Persisted plans coalesce their final stage too
   (``canChangeCachedPlanOutputPartitioning``), so a small cached
   relation does not carry the initial number into every reader.
+- The generated-code cache holds 1,000 classes
+  (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). One
+  warm pass of the MinHash index lifecycle plus its clusters query needs
+  more than 100, so at the default a warm pass recompiled 68–145 classes
+  with Janino and the JIT compiled each new class again. At 1,000 a warm
+  pass reuses every class it has compiled before. The cache is static:
+  it is sized at JVM start.
 """
 
 from __future__ import annotations
@@ -75,6 +82,11 @@ def get_spark(app_name: str = "parcialbigdata-spark", master: str | None = None)
         # and repartitionByRange(n, ...) are REPARTITION_BY_NUM shuffles,
         # which AQE never coalesces.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # Generated-code cache: a static conf, so it is set here, before
+        # the JVM starts. One warm dedup-index pass compiles more classes
+        # than the default 100 hold, so the LRU evicted them and every
+        # pass recompiled them; 1,000 holds a whole pass.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Initial shuffle partitions: max(cores, 16), which AQE coalesces
         # down for small shuffles. Measured bench time rises
         # monotonically with extra partitions (pure task-scheduling

@@ -823,11 +823,171 @@ def test_streaming_minhash_index_jobs_per_drain_pinned(spark, tmp_path):
     assert max(tasks.values()) <= 8, f"tasks per stage: {tasks}"
 
 
+def test_minhash_batch_relations_py4j_round_trips_pinned(spark, monkeypatch):
+    """Building one batch's band and set relations on a warm session
+    stays a few hundred py4j round trips: the wide MinHash expressions
+    are SQL text, not one Column call per hash. Built with the Column
+    API the same plans took about 2,600."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    from parcialbigdata_spark.operators import dedup
+
+    rows = dedup.shingle_rows(_docs(spark, [(1, BASE_TEXT)]), "doc_id", "text", 2)
+    dedup.minhash_batch_relations(rows, "doc_id")  # warm the session
+    gc.collect()
+    calls = []
+    real = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        calls.append(command)
+        return real(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    dedup.minhash_batch_relations(rows, "doc_id")
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 300, f"{len(calls)} py4j round trips"
+
+
+def test_warm_dedup_sequence_recompiles_nothing(spark, tmp_path):
+    """A second run of the same plans compiles no generated code: the
+    session's codegen cache holds every class of a streaming minhash
+    drain plus a clusters query. Spark's default cache of 100 entries
+    evicts the first plans' classes before the sequence ends, so every
+    run recompiled them. AQE is off for the pin because its stage race
+    renumbers whole-stage codegen stages between runs (identical code
+    under another class name), which is a miss the cache size cannot
+    prevent."""
+    from parcialbigdata_spark.operators.graph import dedup_clusters
+    from parcialbigdata_spark.streaming.dedup_store import (
+        run_streaming_minhash_index,
+    )
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    bands_t, sets_t = "t_recompile_bands", "t_recompile_sets"
+
+    def sequence(base):
+        spark.sql(f"DROP TABLE IF EXISTS {bands_t}")
+        spark.sql(f"DROP TABLE IF EXISTS {sets_t}")
+        stream_dir = _minhash_stream(spark, str(base), _MINHASH_BATCHES)
+        pairs = run_streaming_minhash_index(
+            spark, stream_dir, bands_t, sets_t, threshold=0.3, k_shingle=2,
+            pairs_dir=str(base / "pairs"),
+        )
+        pairs.collect()
+        edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a bigint, id_b bigint")
+        dedup_clusters(edges).collect()
+        return compiles.METRIC_COMPILATION_TIME().getCount()
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        first = sequence(tmp_path / "first")
+        second = sequence(tmp_path / "second")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.sql(f"DROP TABLE IF EXISTS {bands_t}")
+        spark.sql(f"DROP TABLE IF EXISTS {sets_t}")
+    assert second - first == 0, f"{second - first} classes recompiled"
+
+
 # ----------------------------------------------- r9: property tests
 
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+
+
+# Column-API reference builders: the MinHash expressions as they were
+# written before they became SQL text. The property test below holds the
+# SQL-text builders of operators/dedup.py to their output.
+
+
+def _ref_signatures(rows, id_col, num_hashes):
+    hashed = rows.select(F.col(id_col), F.xxhash64("__s").alias("__h"))
+    return hashed.groupBy(id_col).agg(
+        *[F.min(F.xxhash64(F.lit(i), F.col("__h"))).alias(f"m{i}") for i in range(num_hashes)]
+    )
+
+
+def _ref_banded(sigs, id_col, num_hashes, bands):
+    r = num_hashes // bands
+    banded = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_idx"),
+                F.xxhash64(*[F.col(f"m{b * r + j}") for j in range(r)]).alias("band_hash"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sigs.select(F.col(id_col), F.explode(banded).alias("band")).select(
+        id_col, "band.band_idx", "band.band_hash"
+    )
+
+
+def _ref_cap(bb, max_bucket):
+    from pyspark.sql import Window
+
+    bucket_n = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_hash"))
+    return bb.withColumn("__n", bucket_n).filter(F.col("__n") <= max_bucket).drop("__n")
+
+
+def _ref_sets(rows, id_col):
+    return rows.groupBy(id_col).agg(F.collect_set(F.xxhash64("__s")).alias("sh"))
+
+
+def _snap(df):
+    """Order-free rows, set arrays sorted."""
+    return sorted(
+        tuple(sorted(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+    )
+
+
+_VOCAB = st.sampled_from(["spark", "index", "band", "hash", "doc"])
+
+
+@given(
+    texts=st.lists(
+        st.lists(_VOCAB, min_size=0, max_size=7).map(" ".join), min_size=1, max_size=8
+    ),
+    k_shingle=st.integers(1, 3),
+    shape=st.sampled_from([(32, 8), (12, 4)]),
+    id_col=st.sampled_from(["doc_id", "doc id"]),
+)
+@example(
+    texts=["spark index band hash"] * 4 + ["doc"], k_shingle=2, shape=(32, 8), id_col="doc_id"
+)
+@settings(max_examples=8, deadline=None)
+def test_minhash_sql_builders_match_column_reference(spark, texts, k_shingle, shape, id_col):
+    """The SQL-text signature, band, bucket-cap and set builders return
+    the same rows and schema as the Column-API reference, for any texts,
+    both hash shapes, a quoted id column and a cap that drops buckets
+    (max_bucket=2; the pinned example has a bucket of 4)."""
+    from parcialbigdata_spark.operators import dedup
+
+    num_hashes, bands = shape
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    rows = dedup.shingle_rows(
+        docs.withColumnRenamed("doc_id", id_col), id_col, "text", k_shingle
+    ).persist()
+    try:
+        sigs = dedup._signatures_from_rows(rows, id_col, num_hashes)
+        ref_sigs = _ref_signatures(rows, id_col, num_hashes)
+        bb, sh = dedup.minhash_batch_relations(rows, id_col, num_hashes, bands)
+        ref_bb = _ref_banded(ref_sigs, id_col, num_hashes, bands)
+        pairs = [
+            (sigs, ref_sigs),
+            (bb, ref_bb),
+            (dedup._cap_buckets(bb, 2), _ref_cap(ref_bb, 2)),
+            (sh, _ref_sets(rows, id_col)),
+        ]
+        for got, want in pairs:
+            assert got.schema == want.schema
+            assert _snap(got) == _snap(want)
+    finally:
+        rows.unpersist()
 
 
 @given(
